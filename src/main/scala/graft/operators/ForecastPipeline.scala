@@ -11,14 +11,18 @@ import graft.stats.{Diagnostics, Sarimax}
   * drift (U9), re-forecast the fitted model along EVERY path, and fan
   * quantiles over the forecasts (A8).
   *
-  * Scale shape: the per-key fits run inside executors
-  * ([[Diagnostics.sarimaxModels]]); the (key × sim) grid is a broadcast
-  * nested-loop of the tiny model table against `spark.range(sims)`, so
-  * path simulation and forecasting distribute across the cluster with no
-  * driver participation. Because the SARIMAX forecast mean is LINEAR in
-  * the exog path (ẑ_j = armaBase_j + c + β·w_j), each simulation costs one
-  * O(h) pass — the reference's per-path `res.get_forecast` re-evaluation
-  * (2000 statespace runs per series) collapses into arithmetic.
+  * Scale shape: the (key × candidate) fits run inside executors
+  * ([[Diagnostics.sarimaxModels]]). AQE coalesces shuffles by bytes, so
+  * that compute-heavy, byte-light stage sits behind a by-number
+  * repartition, which AQE never coalesces. The (key × sim) grid is a
+  * broadcast nested-loop of the tiny model table against
+  * `spark.range(sims)`, so path simulation and forecasting distribute
+  * across the cluster with no driver participation; the fan's quantiles
+  * are one fused aggregate ([[MonteCarlo.fanKeyed]]). Because the
+  * SARIMAX forecast mean is LINEAR in the exog path
+  * (ẑ_j = armaBase_j + c + β·w_j), each simulation costs one O(h) pass —
+  * the reference's per-path `res.get_forecast` re-evaluation (2000
+  * statespace runs per series) collapses into arithmetic.
   *
   * Randomness is the engine's counter-based RNG
   * ([[MonteCarlo.counterRandnKeyed]] / [[MonteCarlo.gaussianJvm]]):

@@ -71,21 +71,26 @@ object MonteCarlo {
   /** [[fan]] grouped by extra key columns (one fan table per series). */
   def fanKeyed(paths: DataFrame, keys: Seq[String],
                qs: Seq[Double] = Seq(0.05, 0.10, 0.50, 0.90, 0.95)): DataFrame =
-    fanAgg(paths, keys,
-      qs.map(q => percentile(col("value"), lit(q)).as(f"p${(q * 100).round}%02d")))
+    fanAgg(paths, keys, qs, percentile(col("value"), array(qs.map(lit): _*)))
 
   /** Shared fan body: one schema for the exact and approximate quantile
-    * variants, so the two can never silently diverge. */
-  private def fanAgg(paths: DataFrame, keys: Seq[String], qcols: Seq[Column]): DataFrame = {
-    val gcols = keys :+ "step"
-    paths.groupBy(gcols.map(col): _*).agg(
-      qcols.head,
-      (qcols.tail ++ Seq(
-        avg(col("value")).as("mean"),
-        stddev_samp(col("value")).as("std"),
-        min(col("value")).as("min"),
-        max(col("value")).as("max"))): _*
-    ).orderBy(gcols.map(col): _*)
+    * variants, so the two can never silently diverge. `quantiles` is ONE
+    * array-valued aggregate over every q: a group's values are buffered
+    * (or sketched) once, not once per quantile, through the partial
+    * aggregation, the shuffle and the final aggregation alike. */
+  private def fanAgg(paths: DataFrame, keys: Seq[String], qs: Seq[Double],
+                     quantiles: Column): DataFrame = {
+    val gcols = (keys :+ "step").map(col)
+    paths.groupBy(gcols: _*).agg(
+      quantiles.as("__q"),
+      avg(col("value")).as("mean"),
+      stddev_samp(col("value")).as("std"),
+      min(col("value")).as("min"),
+      max(col("value")).as("max"))
+      .select(gcols ++ qs.zipWithIndex.map { case (q, i) =>
+        col("__q")(i).as(f"p${(q * 100).round}%02d") } ++
+        Seq("mean", "std", "min", "max").map(col): _*)
+      .orderBy(gcols: _*)
   }
 
   /** At-scale variant of [[fanKeyed]]: `percentile_approx` (a mergeable
@@ -99,8 +104,8 @@ object MonteCarlo {
   def fanApproxKeyed(paths: DataFrame, keys: Seq[String] = Nil,
                      qs: Seq[Double] = Seq(0.05, 0.10, 0.50, 0.90, 0.95),
                      accuracy: Int = 10000): DataFrame =
-    fanAgg(paths, keys, qs.map(q =>
-      percentile_approx(col("value"), lit(q), lit(accuracy)).as(f"p${(q * 100).round}%02d")))
+    fanAgg(paths, keys, qs,
+      percentile_approx(col("value"), array(qs.map(lit): _*), lit(accuracy)))
 
   /** A9: RW drift parameters from the trailing `window` rows of a series
     * (reference `fit_rw_drift_params`): mean and ddof=1 std of first

@@ -2183,8 +2183,12 @@ object Diagnostics {
     // The NM grid is the whole cost and each candidate fit is independent,
     // so parallelize over (key × candidate), not key: with few keys the
     // per-key shape leaves the cluster idle while each task runs the grid
-    // serially. Three shuffles of array-sized rows (assemble, fan, argmin)
-    // buy #keys × #candidates concurrent fits.
+    // serially. AQE coalesces shuffle partitions by BYTES: a (key,
+    // candidate) row carries two short series while its fit costs tens of
+    // milliseconds, so a hash shuffle on (key, candidate) folds every fit
+    // into one task. A by-number round-robin repartition is never
+    // coalesced: it spreads the byte-light, compute-heavy fit stage over
+    // every core.
     val fanned = slim(df, keyCols, orderCol, valueCol, exogCol)
       .groupByKey(_._1)
       .flatMapGroups { (key, it) =>
@@ -2192,9 +2196,8 @@ object Diagnostics {
         candidates.indices.map(ci => (key, ci, y, x))
       }
     val fits = fanned
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (_, it) =>
-        val (key, ci, y, x) = it.next()
+      .repartition(spark.sparkContext.defaultParallelism)
+      .flatMap { case (key, ci, y, x) =>
         val xOpt = exogCol.map(_ => x)
         scala.util.Try(Sarimax.fit(y, xOpt, candidates(ci))).toOption.flatten
           .iterator.map { fit =>

@@ -50,13 +50,15 @@ object CompactOrder {
     * dumps see the REAL child plan instead of the checkpoint's opaque
     * `LogicalRDD`. The round-17 snapshot shipped without this and made
     * 10 pinned plan contracts unobservable (q11 PushedFilters, q29
-    * ReadSchema, …) — worse, their negative assertions passed vacuously. */
-  private val introspectDepth = new java.util.concurrent.atomic.AtomicInteger(0)
+    * ReadSchema, …) — worse, their negative assertions passed vacuously.
+    * The depth is per thread: an introspected build on one thread leaves
+    * staging on for frames built concurrently on others. */
+  private val introspectDepth = ThreadLocal.withInitial[Int](() => 0)
   private val unstagedEnv = sys.env.get("GRAFT_UNSTAGED").contains("1")
   private[graft] def introspecting: Boolean = introspectDepth.get > 0 || unstagedEnv
   def introspected[T](f: => T): T = {
-    introspectDepth.incrementAndGet()
-    try f finally introspectDepth.decrementAndGet()
+    introspectDepth.set(introspectDepth.get + 1)
+    try f finally introspectDepth.set(introspectDepth.get - 1)
   }
 
   /** Checkpoint RDDs created by [[staged]] and not yet released. A
@@ -97,9 +99,7 @@ object CompactOrder {
     * [[releaseStaged]]), and a LOCAL checkpoint is not fault-tolerant —
     * losing an executor loses its blocks and fails the job instead of
     * recomputing from lineage. On a real cluster with churn, a reliable
-    * checkpoint (or recomputing the sampling pass) is the safer dial;
-    * per-member A/B evidence for the batch lives in
-    * `plans/r18/rowtuned_ab.md`. */
+    * checkpoint (or recomputing the sampling pass) is the safer dial. */
   def staged(df: DataFrame): DataFrame =
     if (introspecting) df
     else df.queryExecution.logical match {

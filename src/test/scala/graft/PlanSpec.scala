@@ -24,8 +24,7 @@ class PlanSpec extends SparkSpec {
   private def plan(q: String): String =
     frame(q).queryExecution.executedPlan.toString
 
-  /** Number of Spark jobs launched while `f` runs (listener-bus drain:
-    * polls until the count is stable for ~0.5 s). */
+  /** Number of Spark jobs launched while `f` runs. */
   private def jobsDuring(f: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -36,14 +35,7 @@ class PlanSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       f
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (stable < 10 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val c = n.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
       n.get()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -202,6 +194,14 @@ class PlanSpec extends SparkSpec {
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(readSchema.contains("o_orderdate") && readSchema.contains("o_totalprice"))
     assert(!readSchema.contains("o_comment"), s"unused column read: $readSchema")
+  }
+
+  test("sarimax grid (q39): the candidate fits redistribute round-robin") {
+    // the byte-light (key x candidate) rows sit behind a by-number
+    // repartition, the one shuffle AQE never coalesces into one fit task
+    val p = plan("q39_u8_sarimax_grid")
+    assert(p.contains("Exchange RoundRobinPartitioning"),
+      s"fit redistribution missing:\n$p")
   }
 
   test("repetition stats (q80) and gopher filter (q84) are shuffle-free scans") {
@@ -536,6 +536,9 @@ class PlanSpec extends SparkSpec {
   test("rowTuned staging (q214): checkpoint sits UNDER a retained global sort; " +
     "introspection exposes the full child plan") {
     import org.apache.spark.sql.catalyst.plans.logical.Sort
+    // GRAFT_UNSTAGED=1 (the staging A/B switch) turns staging off, so
+    // there is no staged plan to pin
+    assume(!sys.env.get("GRAFT_UNSTAGED").contains("1"))
     // production frame: root must still be the distributed global Sort
     // (row-scale outputs keep their range exchange), its child the lazy
     // checkpoint's LogicalRDD — the one-compute-instead-of-two staging

@@ -14,6 +14,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def col1[T](df: DataFrame): Seq[Any] = df.collect().toSeq.map(_.get(0))
 
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean = math.abs(a - b) <= tol
+
+  /** Runs `f` under a SparkListener and returns the task count of every
+    * stage that ran meanwhile, in completion order. */
+  def stageTaskCounts(f: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        counts.add(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      counts.asScala.toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -144,6 +144,84 @@ class ForecastPipelineSpec extends SparkSpec {
     }
   }
 
+  /** Seven keys (more than the 4 local cores), 72 months each, with an
+    * exog column; each key's differenced series is AR(1), MA(1) or white
+    * noise with its own coefficient. */
+  private lazy val panel: Seq[(String, Array[Double], Array[Double])] = {
+    val rng = new scala.util.Random(11)
+    Seq(("ar_hi", 0.8, 0.0), ("ar_mid", 0.5, 0.0), ("ar_neg", -0.6, 0.0),
+      ("ma_pos", 0.0, 0.7), ("ma_neg", 0.0, -0.5), ("wn", 0.0, 0.0),
+      ("arma", 0.6, 0.4)).map { case (k, phi, theta) =>
+      val n = 72
+      val x = Array.tabulate(n)(t => 20.0 + 0.2 * t + rng.nextGaussian())
+      val y = new Array[Double](n)
+      var du = 0.0; var e = 0.0; var level = 100.0
+      (0 until n).foreach { t =>
+        val eps = rng.nextGaussian()
+        du = phi * du + eps + theta * e
+        e = eps
+        level += 0.5 + du
+        y(t) = level + 1.5 * x(t)
+      }
+      (k, y, x)
+    }
+  }
+
+  /** The panel as ONE input partition with no known partitioning, so every
+    * grouping still shuffles: under AQE each byte-light shuffle then
+    * coalesces to one task, and only a by-number repartition can fan out. */
+  private def panelDf =
+    spark.sparkContext.parallelize(panel.flatMap { case (k, y, x) =>
+      y.indices.map(t => (k, f"${2015 + t / 12}-${t % 12 + 1}%02d-01", y(t), x(t)))
+    }, 1).toDF("k", "m", "y", "x")
+      .select(col("k"), to_date(col("m")).as("month"), col("y"), col("x"))
+
+  /** d = 1 over s = 1: a seasonal AR(1) at period 1 (index 1) and a plain
+    * AR(1) (index 3) are the same model, so their fits tie to the bit and
+    * AR-driven keys plant an AIC tie that must break to the lower index. */
+  private val tieGrid = Seq(
+    Sarimax.SarimaxSpec(0, 1, 1, 0, 0, 0, 1),
+    Sarimax.SarimaxSpec(0, 1, 0, 1, 0, 0, 1),
+    Sarimax.SarimaxSpec(1, 1, 1, 0, 0, 0, 1),
+    Sarimax.SarimaxSpec(1, 1, 0, 0, 0, 0, 1),
+    Sarimax.SarimaxSpec(0, 1, 0, 0, 0, 0, 1))
+
+  test("sarimaxModels: every row is fitBest + forecastKernel on its key, bit for bit") {
+    val rows = Diagnostics.sarimaxModels(panelDf, Seq("k"), "month", "y", Some("x"),
+      horizon = 6, candidates = tieGrid).collect().map(m => m.key -> m).toMap
+    assert(rows.keySet == panel.map(_._1).toSet)
+    def bits(a: Array[Double]) = a.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    def b(v: Double) = java.lang.Double.doubleToRawLongBits(v)
+    panel.foreach { case (k, y, x) =>
+      val m = rows(k)
+      val fit = Sarimax.fitBest(y, Some(x), tieGrid).get
+      val kern = Sarimax.forecastKernel(fit, y, Some(x), 6)
+      val c = fit.spec
+      assert(m.order == s"(${c.p},${c.d},${c.q})" &&
+        m.seasonal == s"(${c.P},${c.D},${c.Q},${c.s})", s"$k: $c")
+      assert(b(m.aic) == b(fit.aic) && b(m.intercept) == b(fit.intercept) &&
+        b(m.beta) == b(fit.beta) && b(m.sigma2) == b(fit.sigma2), s"$k: $m vs $fit")
+      assert(bits(m.armaBase) == bits(kern.armaBase) && bits(m.yTail) == bits(kern.yTail) &&
+        bits(m.xTail) == bits(kern.xTail), s"$k: forecast kernel differs")
+    }
+    // the planted tie: the two AR(1) forms fit to the same AIC and win
+    // on ar_hi, which keeps the lower index (the seasonal spelling)
+    val (_, y, x) = panel.find(_._1 == "ar_hi").get
+    val Seq(sar, ar) = Seq(1, 3).map(i => Sarimax.fit(y, Some(x), tieGrid(i)).get.aic)
+    assert(b(sar) == b(ar), s"no planted tie: $sar vs $ar")
+    assert(rows("ar_hi").aic == sar && rows("ar_hi").order == "(0,1,0)" &&
+      rows("ar_hi").seasonal == "(1,0,0,1)", rows("ar_hi").toString)
+  }
+
+  test("sarimaxModels: the fit stage runs on every core, not one AQE-coalesced task") {
+    val expected = math.min(spark.sparkContext.defaultParallelism, panel.length * tieGrid.length)
+    val counts = stageTaskCounts {
+      Diagnostics.sarimaxModels(panelDf, Seq("k"), "month", "y", Some("x"),
+        horizon = 6, candidates = tieGrid).collect()
+    }
+    assert(counts.max == expected, s"tasks per stage: $counts")
+  }
+
   test("sarimaxMonteCarloFan: multi-key fan emits one ordered fan per key") {
     val df1 = fixture().withColumn("k", lit("a"))
     val df2 = fixture(beta = 0.0).withColumn("y", col("y") * 2).withColumn("k", lit("b"))

@@ -75,6 +75,50 @@ class MonteCarloSpec extends SparkSpec {
     }
   }
 
+  test("fanKeyed: ONE fused percentile aggregate, bit-equal to per-quantile percentiles") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Percentile}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val qs = Seq(0.05, 0.10, 0.50, 0.90, 0.95)
+    val names = Seq("p05", "p10", "p50", "p90", "p95")
+    val paths = MonteCarlo.simulatePaths(spark, sims = 300, horizon = 6, start = 100.0,
+      mu = 0.5, sigma = 2.0, seed = 11L)
+      .withColumn("key", when(col("sim_id") % 3 === 0, "a").otherwise("b"))
+    // how many `fn` aggregates each aggregate node of the executed plan carries
+    def quantileFns(df: DataFrame, fn: Class[_]): Seq[Int] = {
+      df.collect()
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec => a.aggregateExpressions.count(e => fn.isInstance(e.aggregateFunction))
+      }
+    }
+
+    val fused = MonteCarlo.fanKeyed(paths, Seq("key"), qs)
+    assert(fused.columns.toSeq ==
+      Seq("key", "step") ++ names ++ Seq("mean", "std", "min", "max"))
+    // the per-quantile form the fan replaced
+    val perQ = paths.groupBy("key", "step")
+      .agg(percentile(col("value"), lit(qs.head)).as(names.head),
+        qs.tail.zip(names.tail).map { case (q, n) => percentile(col("value"), lit(q)).as(n) }: _*)
+      .orderBy("key", "step")
+    def bits(df: DataFrame) = df.select(("key" +: "step" +: names).map(col): _*).collect()
+      .map(r => (r.getString(0), r.getInt(1),
+        names.indices.map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i + 2)))))
+      .toSeq
+    val got = bits(fused)
+    assert(got.length == 12)
+    assert(got == bits(perQ), "fused quantiles differ from per-quantile percentiles")
+
+    val fusedFns = quantileFns(fused, classOf[Percentile])
+    assert(fusedFns.nonEmpty && fusedFns.forall(_ == 1), s"percentiles per aggregate: $fusedFns")
+    val perQFns = quantileFns(perQ, classOf[Percentile]) // the count sees the unfused form
+    assert(perQFns.nonEmpty && perQFns.forall(_ == 5), s"per-quantile form: $perQFns")
+    val approxFns = quantileFns(MonteCarlo.fanApproxKeyed(paths, Seq("key"), qs),
+      classOf[ApproximatePercentile])
+    assert(approxFns.nonEmpty && approxFns.forall(_ == 1),
+      s"approx percentiles per aggregate: $approxFns")
+  }
+
   test("poissonBootstrapCi: brackets the mean, deterministic, full replicate set") {
     import spark.implicits._
     val df = (1 to 500).map(i => ("k", i.toLong, i.toLong)).toDF("k", "id", "v")
