@@ -17,18 +17,14 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 object CesIngest {
 
   /** S3: tab-separated scan, header row, every column string (the BLS files
-    * ship numeric-looking columns with footnote junk — cast later). The
-    * header names are trimmed + lowercased like the reference's
-    * `[c.strip().lower() for c in df.columns]`. */
-  def readTsv(spark: SparkSession, path: String, sep: String = "\t"): DataFrame = {
-    // no inferSchema -> every column arrives as StringType, like
-    // pandas read_csv(dtype="string")
-    val raw = spark.read
-      .option("sep", sep)
-      .option("header", "true")
-      .csv(path)
-    normalizeHeaders(raw)
-  }
+    * ship numeric-looking columns with footnote junk — cast later), like
+    * pandas `read_csv(dtype="string")`. The header line is read on the
+    * driver ([[org.apache.spark.sql.graft.HeaderCsv]]), so building the
+    * frame runs no Spark job; its columns are the ones Spark's header
+    * inference would name. The names are then trimmed + lowercased like
+    * the reference's `[c.strip().lower() for c in df.columns]`. */
+  def readTsv(spark: SparkSession, path: String, sep: String = "\t"): DataFrame =
+    normalizeHeaders(org.apache.spark.sql.graft.HeaderCsv.read(spark, path, Map("sep" -> sep)))
 
   /** Header hygiene: trim + lowercase column names (P2 prelude). */
   def normalizeHeaders(df: DataFrame): DataFrame =

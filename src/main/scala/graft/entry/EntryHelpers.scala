@@ -23,9 +23,11 @@ private[graft] object EntryHelpers {
     * "grid", "row") so audits can enumerate each class mechanically —
     * `GridBoundSpec` re-derives the grid-bounded contract for every
     * "grid" member each suite run instead of trusting the one-off r17
-    * scaling audit. */
+    * scaling audit. `maxRows` is a grid member's declared output bound,
+    * when its construction fixes one (node ids mod a constant, …). */
   private[graft] final class TaggedQueryFn(
-      val tag: String, f: (SparkSession, String) => DataFrame)
+      val tag: String, f: (SparkSession, String) => DataFrame,
+      val maxRows: Option[Long] = None)
       extends ((SparkSession, String) => DataFrame) {
     def apply(s: SparkSession, d: String): DataFrame = f(s, d)
   }
@@ -45,6 +47,14 @@ private[graft] object EntryHelpers {
   private[graft] def gridTuned(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     new TaggedQueryFn("grid",
       (s, d) => org.apache.spark.sql.graft.CompactOrder(f(GraftSession.tune(s), d)))
+
+  /** [[gridTuned]] for a member whose output bound is DECLARED by its
+    * construction — at most `maxRows` rows at every scale — rather than
+    * inferred from growth across SFs: a grid that saturates early (q126's
+    * 1013 nodes) reads as growth to the heuristic. `GridBoundSpec` checks
+    * the declared bound instead. */
+  private[graft] def gridTuned(maxRows: Long)(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
+    new TaggedQueryFn("grid", gridTuned(f), Some(maxRows))
 
   /** [[tuned]] plus [[org.apache.spark.sql.graft.CompactOrder.staged]]:
     * for ROW-SCALE outputs the distributed global sort stays, but a lazy

@@ -1377,7 +1377,7 @@ private[graft] object QueriesA {
     // neighbor self-join explodes at hub nodes). Edges are a
     // deterministic 1013-node graph derived from orders; counts exact
     // longs, so the oracle replays the identical orientation
-    "q126_x_triangle_count" -> gridTuned((s, d) => {
+    "q126_x_triangle_count" -> gridTuned(maxRows = 1013)((s, d) => {
       val edges = Tables.orders(s, d).select(
         (col("o_orderkey") % 1013).cast("string").as("src"),
         ((col("o_orderkey") * 7 + col("o_custkey")) % 1013).cast("string").as("dst"))

@@ -7,18 +7,23 @@ import org.apache.spark.sql.functions.col
   *
   * The reference writes single CSV files per career
   * (`df.to_csv(path, index=False)`); that shape is reproduced for parity
-  * but flagged: at 100 TB the only sane sink is partitioned parquet —
-  * `coalesce(1)` funnels the whole result through one task and exists here
+  * but flagged: at 100 TB the only sane sink is partitioned parquet. A
+  * single file is written by one task, so the RESULT funnels through that
+  * task (the scan and joins upstream of it stay parallel); it exists here
   * strictly for small, human-facing exports.
   */
 object Sinks {
 
   /** S6: single-file CSV with header, rows globally sorted (the reference
-    * sorts before writing; a single ordered file only makes sense for
-    * small exports — see class doc). */
+    * sorts before writing). The sort — `sortCols`, or a root `orderBy`
+    * already on `df` — runs inside the one writing task, behind a
+    * single-partition shuffle ([[org.apache.spark.sql.graft.CompactOrder.onePartition]]):
+    * no range exchange and no sampling job over the upstream, whose scan
+    * stays on all its tasks. A single ordered file only makes sense for
+    * small exports — see class doc. */
   def csvSingleFile(df: DataFrame, path: String, sortCols: Seq[String]): Unit = {
     val sorted = if (sortCols.isEmpty) df else df.orderBy(sortCols.map(col): _*)
-    sorted.coalesce(1)
+    org.apache.spark.sql.graft.CompactOrder.onePartition(sorted)
       .write.mode("overwrite").option("header", "true").csv(path)
   }
 

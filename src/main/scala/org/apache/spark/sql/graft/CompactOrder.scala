@@ -36,13 +36,30 @@ import org.apache.spark.sql.classic.Dataset
   * silently serializing its final stage at scale.
   */
 object CompactOrder {
-  def apply(df: DataFrame): DataFrame = df.queryExecution.logical match {
-    case Sort(order, true, child, hint) =>
-      Dataset.ofRows(
+  def apply(df: DataFrame): DataFrame = localSortInOnePartition(df, shuffle = false).getOrElse(df)
+
+  /** A root global `Sort` as a local sort over one partition, reached by
+    * a narrow coalesce or a single-partition shuffle; None for any other
+    * root. */
+  private def localSortInOnePartition(df: DataFrame, shuffle: Boolean): Option[DataFrame] =
+    df.queryExecution.logical match {
+      case Sort(order, true, child, hint) => Some(Dataset.ofRows(
         df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        Sort(order, global = false, Repartition(1, shuffle = false, child), hint))
-    case _ => df
-  }
+        Sort(order, global = false, Repartition(1, shuffle, child), hint)))
+      case _ => None
+    }
+
+  /** The single-partition frame a single-file sink writes. A root global
+    * `Sort` — whether the caller's `orderBy` or the frame's own — becomes
+    * `Sort(order, global = false, Repartition(1, shuffle = true, child))`:
+    * one task writes the file, so a local sort over its one partition is
+    * the total order, with no range exchange and no `RangePartitioner`
+    * sampling job over the upstream. Unlike [[apply]]'s narrow coalesce,
+    * the single-partition SHUFFLE keeps the upstream (a multi-split scan,
+    * joins) on all its tasks and funnels only the result. An unsorted
+    * frame has no order to keep and is coalesced. */
+  def onePartition(df: DataFrame): DataFrame =
+    localSortInOnePartition(df, shuffle = true).getOrElse(df.coalesce(1))
 
   /** Plan-introspection escape for [[staged]]: while > 0 (or with
     * `GRAFT_UNSTAGED=1` in the environment, the A/B measurement switch),
@@ -71,14 +88,26 @@ object CompactOrder {
     * frame must not be re-executed (the checkpoint truncated its
     * lineage), which holds for the strictly sequential
     * one-action-per-frame runners and is why release is NOT wired into
-    * ad-hoc consumers like tests. */
-  private val stagedRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+    * ad-hoc consumers like tests.
+    *
+    * The queue holds WEAK references: a consumer that never calls
+    * [[releaseStaged]] (tests, sweep mains) does not pin the checkpoint
+    * blocks for the JVM's life — once its frame is unreachable the RDD is
+    * collected and the ContextCleaner drops its blocks. Cleared entries
+    * are purged on every add, so the queue stays as long as the live
+    * staged frames. */
+  private val stagedRdds = new java.util.concurrent.ConcurrentLinkedQueue[
+    java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]()
+  private def track(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+    stagedRdds.removeIf(_.get == null)
+    stagedRdds.add(new java.lang.ref.WeakReference(rdd))
+  }
   def releaseStaged(): Unit = {
-    var r = stagedRdds.poll()
-    while (r != null) {
-      try r.unpersist(blocking = false) catch { case _: Throwable => () }
-      r = stagedRdds.poll()
+    var ref = stagedRdds.poll()
+    while (ref != null) {
+      val r = ref.get
+      if (r != null) try r.unpersist(blocking = false) catch { case _: Throwable => () }
+      ref = stagedRdds.poll()
     }
   }
 
@@ -107,7 +136,7 @@ object CompactOrder {
         val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         val ck = Dataset.ofRows(spark, child).localCheckpoint(false)
         ck.queryExecution.analyzed match {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => stagedRdds.add(lr.rdd)
+          case lr: org.apache.spark.sql.execution.LogicalRDD => track(lr.rdd)
           case _ => ()
         }
         Dataset.ofRows(spark, Sort(order, global = true, ck.queryExecution.analyzed, hint))

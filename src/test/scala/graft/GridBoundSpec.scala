@@ -17,6 +17,11 @@ package graft
   * small. A violation names the query and fails CI loudly — the same
   * discipline as the GridFence collect bounds, applied to the final
   * sort.
+  *
+  * A member registered with a DECLARED bound (`gridTuned(maxRows = n)`,
+  * whose construction caps its rows, e.g. q126's node ids mod 1013) is
+  * checked against that bound at both SFs instead: a grid that saturates
+  * between the two SFs reads as growth to the heuristic.
   */
 class GridBoundSpec extends SparkSpec {
 
@@ -35,6 +40,11 @@ class GridBoundSpec extends SparkSpec {
         (n0, n1)
       }
       r match {
+        case scala.util.Success((n0, n1)) if fn.maxRows.isDefined =>
+          val bound = fn.maxRows.get
+          if (n0 > bound || n1 > bound)
+            Some(s"$name: rows $n0 (sf0.001), $n1 (sf0.01) exceed the declared bound $bound")
+          else None
         case scala.util.Success((n0, n1)) =>
           // hard cap: the single sort task must hold the whole result.
           // growth cap: 10x the data may fill in sparse grid cells (a

@@ -24,22 +24,6 @@ class PlanSpec extends SparkSpec {
   private def plan(q: String): String =
     frame(q).queryExecution.executedPlan.toString
 
-  /** Number of Spark jobs launched while `f` runs. */
-  private def jobsDuring(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("seasonal grid (q370) broadcasts the trig table — no SMJ, no extra sort") {
     val p = plan("q370_u6_seasonal_grid")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),

@@ -15,6 +15,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean = math.abs(a - b) <= tol
 
+  /** Number of Spark jobs launched while `f` runs. */
+  def jobsDuring(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      n.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Runs `f` under a SparkListener and returns the task count of every
     * stage that ran meanwhile, in completion order. */
   def stageTaskCounts(f: => Unit): Seq[Int] = {

@@ -63,6 +63,50 @@ class CesPipelineSpec extends SparkSpec {
     assert(data.schema.fields.forall(_.dataType.typeName == "string"))
   }
 
+  /** One header-parity case under a fresh temp dir: each element of
+    * `files` is one file's lines; a single file is returned as a file
+    * path, several as a directory of part files. */
+  private def tsvCase(files: Seq[String]*): String = {
+    val d = Files.createTempDirectory("ces_header")
+    def write(p: java.nio.file.Path, lines: Seq[String]) =
+      Files.write(p, lines.mkString("\n").getBytes)
+    if (files.size == 1) write(d.resolve("t.tsv"), files.head).toString
+    else {
+      files.zipWithIndex.foreach { case (lines, i) =>
+        write(d.resolve(f"part-$i%05d.tsv"), lines) }
+      d.toString
+    }
+  }
+
+  test("readTsv: driver-read header names exactly what Spark's inference names") {
+    val cases = Seq(
+      "whitespace-damaged" -> tsvCase(Seq(" Series_ID \tyear\t value ", "S1\t2020\t1.0")),
+      "case-only duplicates" -> tsvCase(Seq("Value\tvalue\tVALUE\tx", "1\t2\t3\t4")),
+      "empty header cell" -> tsvCase(Seq("a\t\tc", "1\t2\t3")),
+      "quoted tab" -> tsvCase(Seq("a\t\"b\tc\"\td", "1\t2\t3")),
+      "leading blank line" -> tsvCase(Seq("", "a\tb", "1\t2")),
+      // the larger part is first in the scan's order, so its header wins
+      "two part files" -> tsvCase(
+        Seq("k\tv_small", "a\t1"),
+        Seq("k\tv_large", "b\t2", "c\t3", "d\t4")),
+      "empty file" -> tsvCase(Nil))
+    cases.foreach { case (what, p) =>
+      val inferred = CesIngest.normalizeHeaders(
+        spark.read.option("header", "true").option("sep", "\t").csv(p))
+      val read = CesIngest.readTsv(spark, p)
+      assert(read.schema === inferred.schema, what)
+      assert(read.collect().toSeq.map(_.toSeq).sortBy(_.mkString("\u0001")) ===
+        inferred.collect().toSeq.map(_.toSeq).sortBy(_.mkString("\u0001")), what)
+    }
+    assert(CesIngest.readTsv(spark, cases(1)._2).columns.toSeq === Seq("value0", "value1", "value2", "x"))
+    assert(CesIngest.readTsv(spark, cases(5)._2).columns.toSeq === Seq("k", "v_large"))
+    assert(CesIngest.readTsv(spark, cases(6)._2).columns.isEmpty)
+  }
+
+  test("readTsv: building the frame runs no Spark job") {
+    assert(jobsDuring(CesIngest.readTsv(spark, s"$dir/ce.data.tsv")) === 0)
+  }
+
   test("findCol: first match wins, absent fails loudly") {
     val data = CesIngest.readTsv(spark, s"$dir/ce.data.tsv")
     assert(CesIngest.findCol(data, Seq("seriesid", "series_id")) === "series_id")
@@ -94,6 +138,24 @@ class CesPipelineSpec extends SparkSpec {
     assert(p.columns.toSeq === CesPipeline.ProxyColumns)
     // near-miss industry I9 (naics 5413) excluded
     assert(p.filter(col("industry_code") === "I9").isEmpty)
+  }
+
+  test("extractProxy -> csvSingleFile: one file, rows sorted by (datatype_text, industry_code, date)") {
+    val (data, series, industry, datatype) = tables
+    val e = CesPipeline.enrich(data, CesPipeline.buildDictionary(series, industry, datatype))
+    val p = CesPipeline.extractProxy(e, mechanic)
+    val out = Files.createTempDirectory("ces_proxy").resolve("out").toString
+    graft.sources.Sinks.csvSingleFile(p, out, Nil)
+    val parts = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv"))
+    assert(parts.length === 1)
+    // one small file reads back as one partition, in file order
+    val back = spark.read.option("header", "true").csv(parts.head.toString).collect().toSeq
+    val expected = p.select(p.columns.map(c => col(c).cast("string")): _*).collect().toSeq
+    assert(back.length === 7)
+    assert(back === expected)
+    val keys = back.map(r => (r.getAs[String]("datatype_text"), r.getAs[String]("industry_code"),
+      r.getAs[String]("date")))
+    assert(keys === keys.sorted)
   }
 
   test("prepMain golden: employment sum + employment-weighted earnings") {

@@ -20,6 +20,43 @@ class SinksSpec extends SparkSpec {
     assert(lines.tail === Seq("1,a", "2,b", "3,c"))
   }
 
+  test("csvSingleFile: a root orderBy sorts in the writing task, behind a " +
+    "single-partition shuffle — no range sampling, the scan stays on 4 tasks") {
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val df = spark.range(0, 1000, 1, 4).toDF().orderBy(desc("id"))
+    val dir = tmp("csv_sink_plan")
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = executed.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val tasks = try stageTaskCounts(Sinks.csvSingleFile(df, dir, Nil))
+      finally spark.listenerManager.unregister(listener)
+    val partitionings = executed.toArray(Array.empty[QueryExecution]).toSeq.flatMap(qe =>
+      new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+        case e: ShuffleExchangeLike => e.outputPartitioning
+      })
+    assert(!partitionings.exists(_.isInstanceOf[RangePartitioning]), partitionings)
+    assert(partitionings.count(_ == SinglePartition) === 1, partitionings)
+    assert(tasks === Seq(4, 1), "the range scan must run on its 4 tasks, only the sort + write on 1")
+    // same file, line for line, as the range-sorted orderBy + coalesce(1)
+    val ranged = tmp("csv_sink_plan_ranged")
+    df.coalesce(1).write.option("header", "true").csv(ranged)
+    def lines(d: String) = {
+      val part = new java.io.File(d).listFiles().filter(_.getName.endsWith(".csv"))
+      assert(part.length === 1)
+      val src = scala.io.Source.fromFile(part.head)
+      try src.getLines().toList finally src.close()
+    }
+    assert(lines(dir) === lines(ranged))
+    assert(lines(dir).take(3) === List("id", "999", "998"))
+  }
+
   test("parquetPartitioned: per-key directories readable with pruning") {
     val dir = tmp("pq_sink")
     Sinks.parquetPartitioned(
