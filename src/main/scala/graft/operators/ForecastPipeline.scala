@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CompactOrder
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 
 import graft.stats.{Diagnostics, Sarimax}
+import graft.stats.Diagnostics.SarimaxModelRow
 
 /** The reference's composed Monte-Carlo forecast pipeline (notebook cells
   * 27/28/32 `monte_carlo_forecast`): fit the AIC-best SARIMAX per series
@@ -14,15 +17,21 @@ import graft.stats.{Diagnostics, Sarimax}
   * Scale shape: the (key × candidate) fits run inside executors
   * ([[Diagnostics.sarimaxModels]]). AQE coalesces shuffles by bytes, so
   * that compute-heavy, byte-light stage sits behind a by-number
-  * repartition, which AQE never coalesces. The (key × sim) grid is a
-  * broadcast nested-loop of the tiny model table against
-  * `spark.range(sims)`, so path simulation and forecasting distribute
-  * across the cluster with no driver participation; the fan's quantiles
-  * are one fused aggregate ([[MonteCarlo.fanKeyed]]). Because the
-  * SARIMAX forecast mean is LINEAR in the exog path
-  * (ẑ_j = armaBase_j + c + β·w_j), each simulation costs one O(h) pass —
-  * the reference's per-path `res.get_forecast` re-evaluation (2000
-  * statespace runs per series) collapses into arithmetic.
+  * repartition, which AQE never coalesces. The fan is one kernel pass
+  * per series, behind the same by-number repartition of the model table:
+  * a task simulates every path of its keys, forecasts each one and emits
+  * the finished fan rows, so the (key × sim × step) grid never becomes
+  * rows, and no generic exact-percentile aggregate buffers it. Only the
+  * fan (keys × h rows) crosses a shuffle, into one partition whose local
+  * sort is the output order — no range exchange, no sampling job. The
+  * trade: all `sims` paths of a key run in one task, holding sims × h
+  * doubles (1,000 × 36 = 288 KB per series); keys spread across tasks.
+  * The exact aggregate it replaces already held every sim of a
+  * (key, step) group in one buffer. Because the SARIMAX forecast mean is
+  * LINEAR in the exog path (ẑ_j = armaBase_j + c + β·w_j), each
+  * simulation costs one O(h) pass — the reference's per-path
+  * `res.get_forecast` re-evaluation (2000 statespace runs per series)
+  * collapses into arithmetic.
   *
   * Randomness is the engine's counter-based RNG
   * ([[MonteCarlo.counterRandnKeyed]] / [[MonteCarlo.gaussianJvm]]):
@@ -32,21 +41,101 @@ import graft.stats.{Diagnostics, Sarimax}
   */
 object ForecastPipeline {
 
-  /** Full pipeline → one fan row per (key, step):
-    * p-quantiles + mean/std/min/max over `sims` forecast paths. */
+  /** Full pipeline → one fan row per (key, step), ordered by (key, step):
+    * p-quantiles (Spark `percentile`'s rule, [[MonteCarlo.percentileSorted]])
+    * + mean/std/min/max over `sims` forecast paths — the same columns as
+    * [[MonteCarlo.fanKeyed]] over [[forecastPaths]]. */
   def sarimaxMonteCarloFan(df: DataFrame, keyCols: Seq[String], orderCol: String,
                            valueCol: String, exogCol: Option[String],
                            horizon: Int, sims: Int, seed: Long = 42L,
                            candidates: Seq[Sarimax.SarimaxSpec] = Sarimax.ReferenceCandidates,
                            fitWindow: Int = 60, clipMin: Option[Double] = Some(0.0),
                            qs: Seq[Double] = Seq(0.05, 0.10, 0.50, 0.90, 0.95)): DataFrame = {
-    val paths = forecastPaths(df, keyCols, orderCol, valueCol, exogCol,
-      horizon, sims, seed, candidates, fitWindow, clipMin)
-    MonteCarlo.fanKeyed(paths, Seq("key"), qs)
+    val models = Diagnostics.sarimaxModels(df, keyCols, orderCol, valueCol,
+      exogCol, horizon, candidates, fitWindow)
+    val schema = StructType(
+      StructField("key", StringType) +: StructField("step", IntegerType, nullable = false) +:
+        (qs.map(MonteCarlo.quantileName) ++ Seq("mean", "std", "min", "max"))
+          .map(StructField(_, DoubleType)))
+    val fan = models.repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .flatMap(m => fanOf(m, sims, seed, clipMin, qs))(Encoders.row(schema))
+    CompactOrder.onePartition(fan.orderBy("key", "step"))
+  }
+
+  /** One series' fan: every path into a step-major buffer (the sims of
+    * step j at `j·sims until (j+1)·sims`), then per step mean and std
+    * folded in sim order as `avg` / `stddev_samp` fold them (std null for
+    * one sim), and quantiles, min and max from the sorted step. */
+  private def fanOf(m: SarimaxModelRow, sims: Int, seed: Long, clipMin: Option[Double],
+                    qs: Seq[Double]): Iterator[Row] = {
+    if (sims <= 0) return Iterator.empty
+    val kern = Diagnostics.kernelOf(m)
+    val h = kern.armaBase.length
+    val paths = new Array[Double](h * sims)
+    var sim = 0
+    while (sim < sims) {
+      val f = simulatePath(m, kern, seed, sim, clipMin)
+      var j = 0
+      while (j < h) { paths(j * sims + sim) = f(j); j += 1 }
+      sim += 1
+    }
+    Iterator.range(0, h).map { j =>
+      val from = j * sims
+      val until = from + sims
+      var sum = 0.0
+      var n = 0.0
+      var avg = 0.0
+      var m2 = 0.0
+      var i = from
+      while (i < until) {
+        val v = paths(i)
+        sum += v
+        n += 1.0
+        val delta = v - avg
+        val deltaN = delta / n
+        avg += deltaN
+        m2 += delta * (delta - deltaN)
+        i += 1
+      }
+      java.util.Arrays.sort(paths, from, until)
+      val row = new Array[Any](qs.length + 6)
+      row(0) = m.key
+      row(1) = j + 1
+      var k = 0
+      while (k < qs.length) { row(k + 2) = MonteCarlo.percentileSorted(paths, from, until, qs(k)); k += 1 }
+      row(k + 2) = sum / n
+      row(k + 3) = if (sims > 1) math.sqrt(m2 / (n - 1.0)) else null
+      row(k + 4) = paths(from)
+      row(k + 5) = paths(until - 1)
+      Row.fromSeq(row.toSeq)
+    }
+  }
+
+  /** Path `simId` of a fitted model: the exog random walk with drift from
+    * counter-based draws, clipped below on the cumulative value (reference
+    * `simulate_exog_paths` shape — the clip does not feed back), run
+    * through the model's linear forecast kernel `kern`
+    * ([[Diagnostics.kernelOf]] of `m`). The one source of the path math
+    * for [[forecastPaths]] and the fused fan. */
+  def simulatePath(m: SarimaxModelRow, kern: Sarimax.ForecastKernel, seed: Long,
+                   simId: Long, clipMin: Option[Double]): Array[Double] = {
+    val h = kern.armaBase.length
+    val x = new Array[Double](h)
+    var cum = 0.0
+    var j = 0
+    while (j < h) {
+      cum += m.mu + m.sigma * MonteCarlo.gaussianJvm(seed, m.key, simId, j + 1)
+      val v = m.lastX + cum
+      x(j) = clipMin.fold(v)(math.max(v, _))
+      j += 1
+    }
+    kern.forecast(x)
   }
 
   /** The raw forecast paths, one row per (key, sim_id, step) — exposed so
-    * callers can fan with different quantiles or inspect path spread. */
+    * callers can fan with different quantiles or inspect path spread. The
+    * (key × sim) grid is a broadcast nested-loop of the model table against
+    * `spark.range(sims)`, one [[simulatePath]] call per grid row. */
   def forecastPaths(df: DataFrame, keyCols: Seq[String], orderCol: String,
                     valueCol: String, exogCol: Option[String],
                     horizon: Int, sims: Int, seed: Long = 42L,
@@ -55,38 +144,8 @@ object ForecastPipeline {
     val spark = df.sparkSession
     val models = Diagnostics.sarimaxModels(df, keyCols, orderCol, valueCol,
       exogCol, horizon, candidates, fitWindow).toDF()
-
-    // Per (key, sim): simulate the exog RW path with counter-based draws,
-    // run the linear forecast kernel. One UDF call = one path; the draw
-    // formula is bit-identical to the expression RNG (parity-asserted).
-    val lo = clipMin
-    val fcPath = udf((m: Row, simId: Long) => {
-      val key = m.getAs[String]("key")
-      val spec = Sarimax.SarimaxSpec(m.getAs[Int]("p"), m.getAs[Int]("d"), m.getAs[Int]("q"),
-        m.getAs[Int]("sp"), m.getAs[Int]("sd"), m.getAs[Int]("sq"), m.getAs[Int]("s"))
-      val kern = Sarimax.ForecastKernel(spec,
-        m.getAs[Double]("intercept"), m.getAs[Double]("beta"),
-        m.getAs[Seq[Double]]("armaBase").toArray,
-        m.getAs[Seq[Double]]("yTail").toArray,
-        m.getAs[Seq[Double]]("xTail").toArray)
-      val lastX = m.getAs[Double]("lastX")
-      val mu = m.getAs[Double]("mu")
-      val sigma = m.getAs[Double]("sigma")
-      val h = kern.armaBase.length
-      // clipped-cumsum RW, reference simulate_exog_paths shape: the clip
-      // applies to the cumulative value, not recursively
-      val x = new Array[Double](h)
-      var cum = 0.0
-      var j = 0
-      while (j < h) {
-        cum += mu + sigma * MonteCarlo.gaussianJvm(seed, key, simId, j + 1)
-        val v = lastX + cum
-        x(j) = lo.fold(v)(math.max(v, _))
-        j += 1
-      }
-      kern.forecast(x)
-    })
-
+    val fcPath = udf((m: SarimaxModelRow, simId: Long) =>
+      simulatePath(m, Diagnostics.kernelOf(m), seed, simId, clipMin))
     spark.range(sims).toDF("sim_id")
       .crossJoin(broadcast(models))
       .select(col("key"), col("sim_id"),

@@ -63,12 +63,38 @@ object MonteCarlo {
     grid.select(col("sim_id"), col("step"), v.as("value"))
   }
 
+  /** Fan column name of quantile `q`: 0.05 → `p05`, 0.5 → `p50`. */
+  def quantileName(q: Double): String = f"p${(q * 100).round}%02d"
+
+  /** JVM twin of Spark's exact `percentile` over `v(from until until)`,
+    * sorted ascending: position (n−1)·q between ranks ⌊pos⌋ and ⌈pos⌉,
+    * interpolated as (hi−pos)·v[lo] + (pos−lo)·v[hi], and v[lo] itself
+    * when the two ranks coincide or hold equal values — the same
+    * operations in the same order, so the result is bit-equal to the
+    * aggregate's (parity-asserted in ForecastPipelineSpec). */
+  def percentileSorted(v: Array[Double], from: Int, until: Int, q: Double): Double = {
+    val pos = (until - from - 1).toLong * q
+    val lo = pos.floor.toLong
+    val hi = pos.ceil.toLong
+    val vLo = v(from + lo.toInt)
+    if (hi == lo) return vLo
+    val vHi = v(from + hi.toInt)
+    if (vHi == vLo) vLo else (hi - pos) * vLo + (pos - lo) * vHi
+  }
+
   /** A8: per-step fan table — exact percentiles (NumPy-matching linear
     * interpolation) + mean/std/min/max across the simulation axis. */
   def fan(paths: DataFrame, qs: Seq[Double] = Seq(0.05, 0.10, 0.50, 0.90, 0.95)): DataFrame =
     fanKeyed(paths, Nil, qs)
 
-  /** [[fan]] grouped by extra key columns (one fan table per series). */
+  /** [[fan]] grouped by extra key columns (one fan table per series):
+    * generic Spark operators over a paths table, one row per
+    * (keys, sim, step). The exact aggregate buffers every value of a
+    * (keys, step) group, shuffles the buffers and range-sorts the result.
+    * The SARIMAX fan does not take this route: it computes the same
+    * columns in one kernel pass per series
+    * ([[ForecastPipeline.sarimaxMonteCarloFan]]); this stays the generic
+    * form and its parity reference. */
   def fanKeyed(paths: DataFrame, keys: Seq[String],
                qs: Seq[Double] = Seq(0.05, 0.10, 0.50, 0.90, 0.95)): DataFrame =
     fanAgg(paths, keys, qs, percentile(col("value"), array(qs.map(lit): _*)))
@@ -88,7 +114,7 @@ object MonteCarlo {
       min(col("value")).as("min"),
       max(col("value")).as("max"))
       .select(gcols ++ qs.zipWithIndex.map { case (q, i) =>
-        col("__q")(i).as(f"p${(q * 100).round}%02d") } ++
+        col("__q")(i).as(quantileName(q)) } ++
         Seq("mean", "std", "min", "max").map(col): _*)
       .orderBy(gcols: _*)
   }

@@ -27,9 +27,10 @@ package graft.stats
   *     (classical "ARIMA with drift"), the identified version of the
   *     reference's weakly-identified levels constant.
   *
-  * Everything here is pure JVM math: Spark parallelizes ACROSS series via
-  * [[Diagnostics.sarimaxForecast]]; one fit is O(n·m²) per likelihood
-  * evaluation (m = max(p+sP, q+sQ+1) ≤ 14 for the reference grid).
+  * Everything here is pure JVM math: Spark parallelizes over (series ×
+  * candidate) fits in [[Diagnostics.sarimaxModels]]; one fit is O(n·m²)
+  * per likelihood evaluation (m = max(p+sP, q+sQ+1) ≤ 14 for the
+  * reference grid), and the filter allocates nothing per step.
   */
 object Sarimax {
 
@@ -95,85 +96,29 @@ object Sarimax {
       i += 1
     }
     // drop the constant term and restore the convention sign
-    Array.tabulate(prod.length - 1)(k => sg * prod(k + 1))
+    val out = new Array[Double](prod.length - 1)
+    i = 0
+    while (i < out.length) { out(i) = sg * prod(i + 1); i += 1 }
+    out
   }
 
   // ------------------------------------------------------- Kalman likelihood
 
   /** Exact Gaussian log-likelihood of ARMA(ar, ma) errors `u` with σ²
-    * concentrated out. Harvey state space: α_{t+1} = T α_t + R ε,
-    * u_t = α_t(0); T has `ar` in its first column and an identity
-    * superdiagonal, R = (1, ma...)ᵀ. Initial state covariance is the exact
-    * stationary solution (Lyapunov by doubling); if the AR part is
-    * non-stationary (allowed — the reference fits with
-    * `enforce_stationarity=False`) it falls back to a large-κ diffuse
-    * approximation. Returns (loglik, σ̂²). */
+    * concentrated out, by the [[ArmaFilter]] recursion. Returns
+    * (loglik, σ̂²); (−∞, NaN) when an innovation variance is not
+    * positive. */
   def armaLoglik(u: Array[Double], ar: Array[Double], ma: Array[Double]): (Double, Double) = {
     val n = u.length
-    val m = math.max(ar.length, ma.length + 1)
-    val phi = Array.tabulate(m)(i => if (i < ar.length) ar(i) else 0.0)
-    val r = Array.tabulate(m)(i => if (i == 0) 1.0 else if (i - 1 < ma.length) ma(i - 1) else 0.0)
-
-    // P0: solve P = T P Tᵀ + R Rᵀ by doubling: Q ← Q + A Q Aᵀ, A ← A².
-    // The non-stationary diffuse fallback's κ must dominate the data scale:
-    // a fixed 1e7 stops being "diffuse" once var(u) approaches it (levels
-    // ~1e9 are in-contract), misweighting the first observations relative
-    // to stationary candidates in the same grid — so κ scales with the
-    // mean square of u (floor 1e7 keeps small-scale series bit-identical).
-    var msU = 0.0
-    var ui = 0
-    while (ui < n) { msU += u(ui) * u(ui); ui += 1 }
-    msU = if (n > 0) msU / n else 1.0
-    val kappa = math.max(1e7, 1e6 * msU)
-    val p0 = stationaryCov(phi, r, m, kappa)
-
-    val a = new Array[Double](m)
-    val p = p0.map(_.clone())
+    val filter = new ArmaFilter(ar, ma, diffuseKappa(u))
     var sumLogF = 0.0
     var sumV2F = 0.0
-    val ta = new Array[Double](m)
-    val tp = Array.ofDim[Double](m, m)
     var t = 0
     while (t < n) {
-      // observe: v = u_t - a(0), F = P(0)(0)
-      val v = u(t) - a(0)
-      val f = p(0)(0)
+      val f = filter.step(u(t))
       if (f <= 1e-300 || f.isNaN) return (Double.NegativeInfinity, Double.NaN)
       sumLogF += math.log(f)
-      sumV2F += v * v / f
-      // update: a ← a + (P e1) v/F ; P ← P - (P e1)(P e1)ᵀ/F
-      val k = Array.tabulate(m)(i => p(i)(0))
-      var i = 0
-      while (i < m) { a(i) += k(i) * v / f; i += 1 }
-      i = 0
-      while (i < m) {
-        var j = 0
-        while (j < m) { p(i)(j) -= k(i) * k(j) / f; j += 1 }
-        i += 1
-      }
-      // predict: a ← T a ; P ← T P Tᵀ + R Rᵀ (structure-exploiting: row i of
-      // T is φ_{i+1}·e1ᵀ + e_{i+2}ᵀ)
-      i = 0
-      while (i < m) { ta(i) = phi(i) * a(0) + (if (i + 1 < m) a(i + 1) else 0.0); i += 1 }
-      Array.copy(ta, 0, a, 0, m)
-      i = 0
-      while (i < m) { // M = T P
-        var j = 0
-        while (j < m) {
-          tp(i)(j) = phi(i) * p(0)(j) + (if (i + 1 < m) p(i + 1)(j) else 0.0)
-          j += 1
-        }
-        i += 1
-      }
-      i = 0
-      while (i < m) { // P = M Tᵀ + RRᵀ
-        var j = 0
-        while (j < m) {
-          p(i)(j) = phi(j) * tp(i)(0) + (if (j + 1 < m) tp(i)(j + 1) else 0.0) + r(i) * r(j)
-          j += 1
-        }
-        i += 1
-      }
+      sumV2F += filter.v * filter.v / f
       t += 1
     }
     val sigma2 = sumV2F / n
@@ -182,66 +127,186 @@ object Sarimax {
     (ll, sigma2)
   }
 
-  /** Stationary state covariance by the doubling iteration; large-κ diffuse
+  /** κ of the diffuse prior taken when the AR part is not stationary:
+    * max(1e7, 1e6·mean(u²)), so it grows with the data scale (the 1e7
+    * floor keeps small-scale series at the original fixed prior). Both
+    * filters — the likelihood's and the forecast's — start from this one
+    * κ, so a forecast's end state is filtered under the prior its fit
+    * maximized. */
+  private def diffuseKappa(u: Array[Double]): Double = {
+    val n = u.length
+    var msU = 0.0
+    var t = 0
+    while (t < n) { msU += u(t) * u(t); t += 1 }
+    msU = if (n > 0) msU / n else 1.0
+    math.max(1e7, 1e6 * msU)
+  }
+
+  /** z_t − c − β·w_t: the ARMA errors of the regression part. */
+  private def residuals(z: Array[Double], w: Option[Array[Double]], c: Double,
+                        b: Double): Array[Double] = {
+    val wz = w.orNull
+    val u = new Array[Double](z.length)
+    var t = 0
+    while (t < z.length) { u(t) = z(t) - c - b * (if (wz == null) 0.0 else wz(t)); t += 1 }
+    u
+  }
+
+  /** Kalman filter for ARMA(ar, ma) errors in Harvey's state space:
+    * α_{t+1} = T α_t + R ε, u_t = α_t(0); T has the AR lags in its first
+    * column and an identity superdiagonal (row i is φ_{i+1}·e1ᵀ + e_{i+2}ᵀ),
+    * R = (1, ma...)ᵀ. The initial covariance is the exact stationary
+    * solution, or the κ-diffuse fallback when the AR part is not stationary
+    * (allowed — the reference fits with `enforce_stationarity=False`).
+    *
+    * The one recursion behind both the likelihood ([[armaLoglik]]) and the
+    * forecast's end state ([[forecastKernel]]), so the forecast filters
+    * under the prior the fit maximized. It runs inside every Nelder-Mead
+    * evaluation: the covariance is a flat row-major m×m array and every
+    * buffer is allocated once per filter, none per step. */
+  private final class ArmaFilter(ar: Array[Double], ma: Array[Double], kappa: Double) {
+    private val m = math.max(ar.length, ma.length + 1)
+    private val phi = new Array[Double](m)
+    private val r = new Array[Double](m)
+    System.arraycopy(ar, 0, phi, 0, ar.length)
+    r(0) = 1.0
+    System.arraycopy(ma, 0, r, 1, ma.length)
+    /** State mean: a_{t+1|t} after [[step]] t. */
+    val a = new Array[Double](m)
+    private val p = stationaryCov(phi, r, m, kappa)
+    private val k = new Array[Double](m)
+    private val ta = new Array[Double](m)
+    private val tp = new Array[Double](m * m)
+    /** Innovation u_t − a(0) of the last [[step]]. */
+    var v = 0.0
+
+    /** Filter observation `ut`: the innovation v with variance F = P(0,0);
+      * when F > 1e-300, update a ← a + (P e1) v/F and
+      * P ← P − (P e1)(P e1)ᵀ/F; then predict a ← T a and
+      * P ← T P Tᵀ + R Rᵀ. Returns F. */
+    def step(ut: Double): Double = {
+      v = ut - a(0)
+      val f = p(0)
+      if (f > 1e-300) {
+        var i = 0
+        while (i < m) { k(i) = p(i * m); i += 1 }
+        i = 0
+        while (i < m) { a(i) += k(i) * v / f; i += 1 }
+        i = 0
+        while (i < m) {
+          val row = i * m
+          var j = 0
+          while (j < m) { p(row + j) -= k(i) * k(j) / f; j += 1 }
+          i += 1
+        }
+      }
+      predictMean()
+      var i = 0
+      while (i < m) { // M = T P
+        val row = i * m
+        var j = 0
+        while (j < m) {
+          tp(row + j) = phi(i) * p(j) + (if (i + 1 < m) p(row + m + j) else 0.0)
+          j += 1
+        }
+        i += 1
+      }
+      i = 0
+      while (i < m) { // P = M Tᵀ + RRᵀ
+        val row = i * m
+        var j = 0
+        while (j < m) {
+          p(row + j) = phi(j) * tp(row) + (if (j + 1 < m) tp(row + j + 1) else 0.0) + r(i) * r(j)
+          j += 1
+        }
+        i += 1
+      }
+      f
+    }
+
+    /** a ← T a. */
+    def predictMean(): Unit = {
+      var i = 0
+      while (i < m) { ta(i) = phi(i) * a(0) + (if (i + 1 < m) a(i + 1) else 0.0); i += 1 }
+      System.arraycopy(ta, 0, a, 0, m)
+    }
+  }
+
+  /** Stationary state covariance (flat row-major m×m) by doubling:
+    * Q ← Q + A Q Aᵀ, A ← A², from A = T, Q = R Rᵀ; the κ-diagonal diffuse
     * fallback when the AR polynomial is not stationary. */
   private def stationaryCov(phi: Array[Double], r: Array[Double], m: Int,
-                            kappa: Double = 1e7): Array[Array[Double]] = {
-    var aMat = Array.tabulate(m, m)((i, j) =>
-      (if (j == 0) phi(i) else 0.0) + (if (j == i + 1) 1.0 else 0.0))
-    var q = Array.tabulate(m, m)((i, j) => r(i) * r(j))
+                            kappa: Double): Array[Double] = {
+    val mm = m * m
+    var aMat = new Array[Double](mm)
+    val q = new Array[Double](mm)
+    var i = 0
+    while (i < m) {
+      var j = 0
+      while (j < m) {
+        aMat(i * m + j) = (if (j == 0) phi(i) else 0.0) + (if (j == i + 1) 1.0 else 0.0)
+        q(i * m + j) = r(i) * r(j)
+        j += 1
+      }
+      i += 1
+    }
+    val aq = new Array[Double](mm)
+    val aqa = new Array[Double](mm)
+    var a2 = new Array[Double](mm)
     var it = 0
     var norm = 1.0
     while (it < 60 && norm > 1e-14) {
-      // Q ← Q + A Q Aᵀ ; A ← A·A
-      val aq = mul(aMat, q)
-      val aqa = mulT(aq, aMat)
-      val q2 = Array.tabulate(m, m)((i, j) => q(i)(j) + aqa(i)(j))
-      aMat = mul(aMat, aMat)
-      q = q2
+      mul(aMat, q, aq, m)
+      mulT(aq, aMat, aqa, m)
+      i = 0
+      while (i < mm) { q(i) = q(i) + aqa(i); i += 1 }
+      mul(aMat, aMat, a2, m)
+      val prev = aMat; aMat = a2; a2 = prev
       norm = 0.0
-      var i = 0
-      while (i < m) { var j = 0; while (j < m) { norm = math.max(norm, math.abs(aMat(i)(j))); j += 1 }; i += 1 }
-      if (norm > 1e6 || norm.isNaN) { // explosive AR: diffuse fallback
-        return Array.tabulate(m, m)((i, j) => if (i == j) kappa else 0.0)
-      }
+      i = 0
+      while (i < mm) { norm = math.max(norm, math.abs(aMat(i))); i += 1 }
+      if (norm > 1e6 || norm.isNaN) return diffuse(m, kappa) // explosive AR
       it += 1
     }
-    if (norm > 1e-8) Array.tabulate(m, m)((i, j) => if (i == j) kappa else 0.0) else q
+    if (norm > 1e-8) diffuse(m, kappa) else q
   }
 
-  private def mul(a: Array[Array[Double]], b: Array[Array[Double]]): Array[Array[Double]] = {
-    val n = a.length
-    val out = Array.ofDim[Double](n, n)
+  private def diffuse(m: Int, kappa: Double): Array[Double] = {
+    val out = new Array[Double](m * m)
+    var i = 0
+    while (i < m) { out(i * m + i) = kappa; i += 1 }
+    out
+  }
+
+  /** out = a · b over flat n×n arrays. */
+  private def mul(a: Array[Double], b: Array[Double], out: Array[Double], n: Int): Unit = {
+    java.util.Arrays.fill(out, 0.0)
     var i = 0
     while (i < n) {
       var k = 0
       while (k < n) {
-        val v = a(i)(k)
-        if (v != 0.0) { var j = 0; while (j < n) { out(i)(j) += v * b(k)(j); j += 1 } }
+        val v = a(i * n + k)
+        if (v != 0.0) { var j = 0; while (j < n) { out(i * n + j) += v * b(k * n + j); j += 1 } }
         k += 1
       }
       i += 1
     }
-    out
   }
 
-  /** a · bᵀ */
-  private def mulT(a: Array[Array[Double]], b: Array[Array[Double]]): Array[Array[Double]] = {
-    val n = a.length
-    val out = Array.ofDim[Double](n, n)
+  /** out = a · bᵀ over flat n×n arrays. */
+  private def mulT(a: Array[Double], b: Array[Double], out: Array[Double], n: Int): Unit = {
     var i = 0
     while (i < n) {
       var j = 0
       while (j < n) {
         var k = 0
         var v = 0.0
-        while (k < n) { v += a(i)(k) * b(j)(k); k += 1 }
-        out(i)(j) = v
+        while (k < n) { v += a(i * n + k) * b(j * n + k); k += 1 }
+        out(i * n + j) = v
         j += 1
       }
       i += 1
     }
-    out
   }
 
   // ------------------------------------------------------------- Nelder-Mead
@@ -323,10 +388,11 @@ object Sarimax {
       var o = 0
       val c0 = if (trendC) { o += 1; v(o - 1) } else 0.0
       val b0 = if (w.isDefined) { o += 1; v(o - 1) } else 0.0
-      val phi = Array.tabulate(p) { i => v(o + i) }; o += p
-      val th = Array.tabulate(q) { i => v(o + i) }; o += q
-      val sp = Array.tabulate(P) { i => v(o + i) }; o += P
-      val st = Array.tabulate(Q) { i => v(o + i) }
+      def take(k: Int) = { o += k; java.util.Arrays.copyOfRange(v, o - k, o) }
+      val phi = take(p)
+      val th = take(q)
+      val sp = take(P)
+      val st = take(Q)
       (c0, b0, phi, th, sp, st)
     }
 
@@ -334,10 +400,13 @@ object Sarimax {
       // bound only the ARMA coefficients: they can destabilize the filter,
       // while (c, β) are linear and legitimately take any magnitude (an
       // absolute cutoff there would silently reject unscaled-level series)
-      if (v.exists(_.isNaN) ||
-          v.drop(nReg).exists(math.abs(_) > 1e3)) return (Double.NegativeInfinity, Double.NaN)
+      var i = 0
+      while (i < v.length) {
+        if (v(i).isNaN || (i >= nReg && math.abs(v(i)) > 1e3)) return (Double.NegativeInfinity, Double.NaN)
+        i += 1
+      }
       val (c0, b0, phi, th, sp, st) = unpack(v)
-      val u = Array.tabulate(n)(t => z(t) - c0 - b0 * w.map(_(t)).getOrElse(0.0))
+      val u = residuals(z, w, c0, b0)
       val arC = expandPoly(phi, sp, s, signAr = true)
       val maC = expandPoly(th, st, s, signAr = false)
       armaLoglik(u, arC, maC)
@@ -475,57 +544,17 @@ object Sarimax {
     import fitted.spec._
     val z = difference(y, d, D, s)
     val w = x.map(difference(_, d, D, s))
-    val n = z.length
-    val u = Array.tabulate(n)(t => z(t) - fitted.intercept - fitted.beta * w.map(_(t)).getOrElse(0.0))
+    val u = residuals(z, w, fitted.intercept, fitted.beta)
     val arC = expandPoly(fitted.phi, fitted.sphi, s, signAr = true)
     val maC = expandPoly(fitted.theta, fitted.stheta, s, signAr = false)
-    val m = math.max(arC.length, maC.length + 1)
-    val phi = Array.tabulate(m)(i => if (i < arC.length) arC(i) else 0.0)
-    val r = Array.tabulate(m)(i => if (i == 0) 1.0 else if (i - 1 < maC.length) maC(i - 1) else 0.0)
-    // filter to the end state a_{n|n-1..n}: same recursion as armaLoglik
-    val a = new Array[Double](m)
-    val p = stationaryCov(phi, r, m).map(_.clone())
-    val ta = new Array[Double](m)
-    val tp = Array.ofDim[Double](m, m)
+    // filter to the end state a_{n+1|n} under the fit's own prior
+    val filter = new ArmaFilter(arC, maC, diffuseKappa(u))
     var t = 0
-    while (t < n) {
-      val v = u(t) - a(0)
-      val f = p(0)(0)
-      if (f > 1e-300) {
-        val kk = Array.tabulate(m)(i => p(i)(0))
-        var i = 0
-        while (i < m) { a(i) += kk(i) * v / f; i += 1 }
-        i = 0
-        while (i < m) { var j = 0; while (j < m) { p(i)(j) -= kk(i) * kk(j) / f; j += 1 }; i += 1 }
-      }
-      var i = 0
-      while (i < m) { ta(i) = phi(i) * a(0) + (if (i + 1 < m) a(i + 1) else 0.0); i += 1 }
-      Array.copy(ta, 0, a, 0, m)
-      i = 0
-      while (i < m) {
-        var j = 0
-        while (j < m) { tp(i)(j) = phi(i) * p(0)(j) + (if (i + 1 < m) p(i + 1)(j) else 0.0); j += 1 }
-        i += 1
-      }
-      i = 0
-      while (i < m) {
-        var j = 0
-        while (j < m) { p(i)(j) = phi(j) * tp(i)(0) + (if (j + 1 < m) tp(i)(j + 1) else 0.0) + r(i) * r(j); j += 1 }
-        i += 1
-      }
-      t += 1
-    }
-    // propagate: after the loop `a` is already a_{n+1|n}; each further T
-    // application advances one step
+    while (t < u.length) { filter.step(u(t)); t += 1 }
+    // each further T application advances one step
     val base = new Array[Double](h)
     var j = 0
-    while (j < h) {
-      base(j) = a(0)
-      var i = 0
-      while (i < m) { ta(i) = phi(i) * a(0) + (if (i + 1 < m) a(i + 1) else 0.0); i += 1 }
-      Array.copy(ta, 0, a, 0, m)
-      j += 1
-    }
+    while (j < h) { base(j) = filter.a(0); filter.predictMean(); j += 1 }
     val tailLen = d + D * s + s * (if (D > 0) 1 else 0) + 1
     ForecastKernel(fitted.spec, fitted.intercept, fitted.beta, base,
       y.takeRight(math.min(y.length, math.max(tailLen, s + d + 1))),

@@ -106,12 +106,15 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("FileScan"), "simulation should not read any table")
   }
 
-  test("MC forecast fan (q40) broadcasts the model table onto the sim grid") {
+  test("MC forecast fan (q40): one kernel pass — no sim grid, percentile or range exchange") {
     val p = plan("q40_u9u8_mc_forecast_fan")
-    assert(p.contains("BroadcastNestedLoopJoin"),
-      s"model x sim grid should be a broadcast nested-loop:\n$p")
-    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      "grid fell back to a shuffled join")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"the fan must not materialize a (key x sim) grid:\n$p")
+    assert(!p.toLowerCase.contains("percentile"),
+      s"quantiles come from the kernel, not an exact percentile aggregate:\n$p")
+    assert(!p.contains("rangepartitioning"), s"the fan order must not range-sample:\n$p")
+    assert("Exchange SinglePartition".r.findAllIn(p).size == 1,
+      s"the fan reaches its local sort through ONE single-partition shuffle:\n$p")
   }
 
   test("bucketed near-dup (q60) shuffles only ids+buckets for pair discovery") {

@@ -6,7 +6,8 @@ import graft.stats.{Diagnostics, Sarimax, TimeSeriesStats}
 
 /** The composed U9∘U8 pipeline: RNG parity between the UDF kernel and the
   * expression tree, exact per-path reproduction of the closed-form
-  * white-noise forecast, and per-key SARIMAX grid behavior. */
+  * white-noise forecast, per-key SARIMAX grid behavior, and the fused
+  * fan kernel against the generic paths + exact-aggregate route. */
 class ForecastPipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -220,6 +221,72 @@ class ForecastPipelineSpec extends SparkSpec {
         horizon = 6, candidates = tieGrid).collect()
     }
     assert(counts.max == expected, s"tasks per stage: $counts")
+  }
+
+  private val parityQs = Seq(0.0, 0.05, 1.0 / 3, 0.5, 0.95, 1.0)
+
+  /** The fused fan, collected in its own (key, step) order, next to the
+    * generic route over the same models: `fanKeyed` (exact `percentile`
+    * aggregate) over `forecastPaths`. */
+  private def fanPair(df: org.apache.spark.sql.DataFrame, sims: Int) = {
+    val fused = ForecastPipeline.sarimaxMonteCarloFan(df, Seq("k"), "month", "y", Some("x"),
+      horizon = 6, sims = sims, seed = 3L, candidates = tieGrid, qs = parityQs)
+    val generic = MonteCarlo.fanKeyed(ForecastPipeline.forecastPaths(df, Seq("k"), "month",
+      "y", Some("x"), horizon = 6, sims = sims, seed = 3L, candidates = tieGrid),
+      Seq("key"), parityQs)
+    (fused, fused.collect(), generic.collect())
+  }
+
+  private def threeKeys = panelDf.filter(col("k").isin("ar_hi", "ma_neg", "arma"))
+
+  test("sarimaxMonteCarloFan kernel matches fanKeyed over forecastPaths (quantiles bit-equal)") {
+    val (fused, got, want) = fanPair(threeKeys, sims = 257)
+    assert(fused.columns.toSeq ==
+      Seq("key", "step", "p00", "p05", "p33", "p50", "p95", "p100", "mean", "std", "min", "max"))
+    assert(got.length == 3 * 6 && want.length == got.length)
+    def bits(v: Any) = java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])
+    def rel(a: Double, b: Double) = math.abs(a - b) / math.max(math.abs(b), 1e-300)
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.getString(0) == w.getString(0) && g.getInt(1) == w.getInt(1), s"$g vs $w")
+      (parityQs.map(MonteCarlo.quantileName) ++ Seq("min", "max")).foreach { c =>
+        assert(bits(g.getAs[Double](c)) == bits(w.getAs[Double](c)), s"$c: $g vs $w")
+      }
+      Seq("mean", "std").foreach { c =>
+        assert(rel(g.getAs[Double](c), w.getAs[Double](c)) <= 1e-12, s"$c: $g vs $w")
+      }
+    }
+  }
+
+  test("sarimaxMonteCarloFan: one sim gives a null std, as stddev_samp does") {
+    val (_, got, want) = fanPair(threeKeys, sims = 1)
+    assert(got.length == 18)
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.isNullAt(g.fieldIndex("std")) && w.isNullAt(w.fieldIndex("std")), s"$g vs $w")
+      assert(g.getAs[Double]("min") == g.getAs[Double]("max") &&
+        g.getAs[Double]("p50") == w.getAs[Double]("p50"), s"$g vs $w")
+    }
+  }
+
+  test("sarimaxMonteCarloFan: one kernel stage on every core, then one single-partition sort") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Percentile
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val fan = ForecastPipeline.sarimaxMonteCarloFan(panelDf, Seq("k"), "month", "y", Some("x"),
+      horizon = 6, sims = 64, seed = 3L, candidates = tieGrid)
+    val counts = stageTaskCounts(fan.collect())
+    val kernelTasks = math.min(spark.sparkContext.defaultParallelism, panel.length)
+    assert(counts.takeRight(2) == Seq(kernelTasks, 1), s"tasks per stage: $counts")
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(fan.queryExecution.executedPlan) {
+      case n => n
+    }
+    val partitionings = nodes.collect { case e: ShuffleExchangeLike => e.outputPartitioning }
+    assert(!partitionings.exists(_.isInstanceOf[RangePartitioning]), partitionings)
+    assert(partitionings.count(_ == SinglePartition) == 1, partitionings)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), fan.queryExecution.executedPlan)
+    assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[Percentile]))),
+      fan.queryExecution.executedPlan)
   }
 
   test("sarimaxMonteCarloFan: multi-key fan emits one ordered fan per key") {

@@ -13,6 +13,8 @@ import Sarimax._
   *      the same winner, which is what makes the grid's ranking portable;
   *   3. forecasts match hand-derived recursions (AR(1) decay-to-mean,
   *      drift + seasonal-pattern continuation after un-differencing).
+  * A raw-bits digest over the reference grid pins every fit and forecast
+  * kernel, so a rewrite of the filter must reproduce them to the bit.
   */
 class SarimaxSpec extends AnyFunSuite {
 
@@ -64,6 +66,63 @@ class SarimaxSpec extends AnyFunSuite {
       i += 1
     }
     cur
+  }
+
+  /** Explosive AR(1) on the fully differenced scale (φ = 1.06, no
+    * burn-in), integrated back to levels. */
+  private def explosive(n: Int, sigma: Double, seed: Long): Array[Double] = {
+    val rng = new Random(seed)
+    val u = new Array[Double](n - 13)
+    var t = 0
+    while (t < u.length) {
+      u(t) = (if (t > 0) 1.06 * u(t - 1) else 0.0) + rng.nextGaussian() * sigma
+      t += 1
+    }
+    integrate(u, d = 1, D = 1, s = 12)
+  }
+
+  // ------------------------------------------------------ bit-level golden
+
+  /** Four series × the 5 reference candidates: a planted seasonal ARMA
+    * with an exog column, an MA process without exog, a seasonal AR with
+    * exog, and an explosive AR at a scale where the diffuse prior sits at
+    * its 1e7 floor. */
+  private lazy val goldenSeries: Seq[(String, Array[Double], Option[Array[Double]])] = {
+    val rng = new Random(17)
+    val n = 96
+    val x1 = Array.tabulate(n)(t => 40.0 + 0.4 * t + rng.nextGaussian())
+    val u1 = simArma(n - 13, expandPoly(Array(0.5), Array.empty, 12, signAr = true),
+      expandPoly(Array.empty, Array(0.3), 12, signAr = false), 1.0, seed = 3)
+    val y1 = integrate(u1.map(_ + 0.1), 1, 1, 12).zip(x1).map { case (a, b) => a + 2.0 * b }
+    val y2 = integrate(simArma(n - 13, Array.empty, Array(-0.4), 2.0, seed = 4), 1, 1, 12)
+    val x3 = Array.tabulate(n)(t => 5.0 + math.sin(t / 3.0) + rng.nextGaussian() * 0.2)
+    val u3 = simArma(n - 13, expandPoly(Array.empty, Array(0.5), 12, signAr = true),
+      Array.empty, 0.5, seed = 5)
+    val y3 = integrate(u3, 1, 1, 12).zip(x3).map { case (a, b) => a - 1.5 * b }
+    Seq(("seasonal_arma_exog", y1, Some(x1)), ("ma_no_exog", y2, None),
+      ("seasonal_ar_exog", y3, Some(x3)), ("explosive_ar", explosive(n, 0.01, 6), None))
+  }
+
+  test("fit + forecastKernel reproduce the golden raw-bits digest over the reference grid") {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def put(vs: Double*): Unit = vs.foreach(v =>
+      md.update(java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(v)).getBytes("UTF-8")))
+    var explosiveFits = 0
+    for ((name, y, x) <- goldenSeries; spec <- ReferenceCandidates) {
+      md.update(s"$name $spec".getBytes("UTF-8"))
+      fit(y, x, spec) match {
+        case None => md.update("none".getBytes("UTF-8"))
+        case Some(f) =>
+          put(f.intercept, f.beta)
+          put(f.phi.toIndexedSeq ++ f.theta ++ f.sphi ++ f.stheta: _*)
+          put(f.sigma2, f.loglik, f.aic)
+          put(forecastKernel(f, y, x, 12).armaBase.toIndexedSeq: _*)
+          if (name == "explosive_ar" && f.phi.exists(math.abs(_) > 1.0)) explosiveFits += 1
+      }
+    }
+    assert(explosiveFits > 0, "no fit of the explosive series took the diffuse prior")
+    val got = md.digest().map("%02x".format(_)).mkString
+    assert(got == "1036623692129549d6e4c978f2a42f06", s"fit digest moved: $got")
   }
 
   // ------------------------------------------------- filter exactness checks
@@ -290,6 +349,53 @@ class SarimaxSpec extends AnyFunSuite {
       val t = 120 + j
       val expected = 5.0 * t + 20.0 * math.sin(2 * math.Pi * (t % s) / s)
       approx(fc(j), expected, 1e-6)
+    }
+  }
+
+  /** Textbook Kalman filter of ARMA(1,1) errors from P0 = κ·I (the
+    * diffuse prior of an explosive AR): the one-step prediction a_{n+1|n}
+    * propagated `h` steps through T — an independent reference for
+    * [[Sarimax.forecastKernel]]'s `armaBase`. */
+  private def arma11Base(u: Array[Double], phi: Double, theta: Double, kappa: Double,
+                         h: Int): Array[Double] = {
+    var a = Array(0.0, 0.0)
+    var p = Array(Array(kappa, 0.0), Array(0.0, kappa))
+    u.foreach { ut =>
+      val f = p(0)(0)
+      val k = Array(p(0)(0) / f, p(1)(0) / f)
+      val v = ut - a(0)
+      a = Array(a(0) + k(0) * v, a(1) + k(1) * v)
+      p = Array.tabulate(2, 2)((i, j) => p(i)(j) - k(i) * p(0)(j))
+      // predict with T = [[φ, 1], [0, 0]], R = (1, θ)
+      a = Array(phi * a(0) + a(1), 0.0)
+      val tp0 = Array(phi * p(0)(0) + p(1)(0), phi * p(0)(1) + p(1)(1))
+      p = Array(Array(tp0(0) * phi + tp0(1) + 1.0, theta), Array(theta, theta * theta))
+    }
+    Array.tabulate(h) { _ => val v = a(0); a = Array(phi * a(0) + a(1), 0.0); v }
+  }
+
+  test("forecastKernel: an explosive-AR end state is filtered under the likelihood's prior") {
+    // armaLoglik's diffuse κ is max(1e7, 1e6·mean(u²)); the forecast must
+    // filter under that same prior, at any data scale. A near-unit MA
+    // keeps the prior's pull alive to the end state (a pure AR state is
+    // pinned by its first m observations whatever the prior).
+    val (phi, theta) = (1.06, 0.99)
+    for (c <- Seq(1.0, 1e4)) {
+      val y = explosive(96, 1.0, 8).map(_ * c)
+      val f = SarimaxFit(SarimaxSpec(1, 1, 1, 0, 1, 0, 12), intercept = 0.3 * c, beta = 0.0,
+        phi = Array(phi), theta = Array(theta), sphi = Array.empty, stheta = Array.empty,
+        sigma2 = c * c, loglik = 0.0, aic = 0.0, nObs = 83)
+      val u = difference(y, 1, 1, 12).map(_ - f.intercept)
+      val kappa = math.max(1e7, 1e6 * u.map(v => v * v).sum / u.length)
+      val expected = arma11Base(u, phi, theta, kappa, 12)
+      val fixed = arma11Base(u, phi, theta, 1e7, 12)
+      val got = forecastKernel(f, y, None, 12).armaBase
+      def rel(a: Double, b: Double) = math.abs(a - b) / math.abs(b)
+      expected.indices.foreach { j =>
+        assert(rel(got(j), expected(j)) <= 1e-13, s"×$c step $j: ${got(j)} vs ${expected(j)}")
+        // the check bites: the fixed-κ prior lands measurably elsewhere
+        assert(rel(fixed(j), expected(j)) > 1e-12, s"×$c step $j: κ does not matter here")
+      }
     }
   }
 
