@@ -22,7 +22,13 @@ object CesIngest {
     * driver ([[org.apache.spark.sql.graft.HeaderCsv]]), so building the
     * frame runs no Spark job; its columns are the ones Spark's header
     * inference would name. The names are then trimmed + lowercased like
-    * the reference's `[c.strip().lower() for c in df.columns]`. */
+    * the reference's `[c.strip().lower() for c in df.columns]`.
+    *
+    * A file of a few MB is scanned on all the cores: the session's file
+    * open cost ([[graft.GraftSession.FileOpenCostBytes]]) lets it split
+    * into `defaultParallelism` byte ranges, each task reads the lines
+    * that start in its range, and only the range at byte 0 drops the
+    * header line. Files smaller than the open cost stay one split. */
   def readTsv(spark: SparkSession, path: String, sep: String = "\t"): DataFrame =
     normalizeHeaders(org.apache.spark.sql.graft.HeaderCsv.read(spark, path, Map("sep" -> sep)))
 

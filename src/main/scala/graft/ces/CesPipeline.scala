@@ -103,10 +103,14 @@ object CesPipeline {
     "industry_code", "industry_name", "datatype_code", "datatype_text", "value")
 
   /** v1 `extract_proxy_dataset` (load_CES_pandas.py:157-200): enriched rows
-    * for ONE career predicate, keep-list projected, sorted. */
+    * for ONE career predicate, keep-list projected, sorted by
+    * (datatype_text, industry_code, date). The seasonally adjusted and
+    * unadjusted series of one industry and data type tie on that key, so
+    * `series_id` breaks the tie: otherwise their order in a written file
+    * would follow the order the scan's splits reach the sorting task. */
   def extractProxy(enriched: DataFrame, career: Career): DataFrame =
     CesIngest.keepExisting(enriched.filter(naicsMask(career)), ProxyColumns)
-      .orderBy("datatype_text", "industry_code", "date")
+      .orderBy("datatype_text", "industry_code", "date", "series_id")
 
   /** Full prep-main: raw tables -> per-career monthly collapsed series.
     * Returns (career, date, employment_thousands, avg_hourly_earnings). */

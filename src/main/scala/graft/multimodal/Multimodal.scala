@@ -584,13 +584,6 @@ object Multimodal {
     finally iis.close()
   }
 
-  /** Column form of [[videoMeta]] — a struct with the [[mediaMetaSchema]]
-    * field names, so [[frameSampleIndices]] consumes it directly. */
-  def videoMetaCol(bin: Column): Column = {
-    val f = udf((b: Array[Byte]) => videoMeta(b))
-    f(bin)
-  }
-
   /** REAL multi-frame decode of the SAMPLED frames only: one container
     * parse per row, random-access `reader.read(i)` per requested index
     * (GIF frames here are full-frame, no inter-frame compositing), and

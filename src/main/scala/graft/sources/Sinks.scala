@@ -11,6 +11,12 @@ import org.apache.spark.sql.functions.col
   * single file is written by one task, so the RESULT funnels through that
   * task (the scan and joins upstream of it stay parallel); it exists here
   * strictly for small, human-facing exports.
+  *
+  * Local writes start no process: Hadoop sets the permissions of every
+  * directory and file a write makes, and without libhadoop it forks
+  * `chmod` for each (9 per single-file CSV write); the sessions the
+  * engine tunes set them in-process instead
+  * ([[graft.sources.PosixLocalFileSystem]]).
   */
 object Sinks {
 

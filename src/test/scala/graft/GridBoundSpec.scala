@@ -49,9 +49,10 @@ class GridBoundSpec extends SparkSpec {
           // hard cap: the single sort task must hold the whole result.
           // growth cap: 10x the data may fill in sparse grid cells (a
           // small-count floor absorbs that) but must not scale the
-          // output with the corpus.
+          // output with the corpus. A member empty at the small SF is
+          // held to the floor alone.
           if (n1 > 5000) Some(s"$name: rows(sf0.01)=$n1 exceeds the 5000-row grid cap")
-          else if (n0 > 0 && n1 > math.max(2.5 * n0, 64))
+          else if (n1 > math.max(2.5 * n0, 64))
             Some(s"$name: rows grew $n0 -> $n1 across 10x data — output scales with the corpus")
           else None
         case scala.util.Failure(e) =>

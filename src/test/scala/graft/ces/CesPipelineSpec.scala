@@ -158,6 +158,117 @@ class CesPipelineSpec extends SparkSpec {
     assert(keys === keys.sorted)
   }
 
+  /** A BLS-layout fact TSV of a few MB (several times the session's file
+    * open cost, so a scan splits it across the cores) with its dimension
+    * tables: 60 industries x 2 data types x S/U x 25 years x 13 periods,
+    * header and keys whitespace-padded, rows in seeded random order so the
+    * S and U rows that tie on the proxy's (datatype_text, industry_code,
+    * date) key appear in either order. */
+  private lazy val bigDir = {
+    val d = Files.createTempDirectory("ces_split")
+    def write(name: String, lines: Seq[String]): Unit =
+      Files.write(d.resolve(name), lines.mkString("\n").getBytes)
+    val rnd = new scala.util.Random(17)
+    val industries = 1 to 60
+    val series = for (i <- industries; dt <- Seq("01", "03"); sa <- Seq("S", "U"))
+      yield (f"CE$sa$i%08d$dt", f"I$i%02d", dt, sa)
+    val facts = for ((id, _, dt, _) <- series; y <- 1995 to 2019; m <- 1 to 13) yield {
+      val v = if (dt == "01") rnd.nextDouble() * 1000 else 10 + rnd.nextDouble() * 40
+      f" $id%-17s\t$y\tM$m%02d\t   " + "%.3f".formatLocal(java.util.Locale.ROOT, v) +
+        (if (rnd.nextInt(9) == 0) "\tP" else "\t")
+    }
+    write("ce.data.tsv", "series_id        \tyear\tperiod\t       value\tfootnote_codes" +:
+      rnd.shuffle(facts))
+    write("ce.series.tsv", "series_id\tindustry_code\tdata_type_code\tseasonal" +:
+      series.map { case (id, ind, dt, sa) => s"$id \t$ind\t$dt\t$sa" })
+    write("ce.industry.tsv", "industry_code\tnaics_code\tindustry_name" +:
+      industries.map(i => f"I$i%02d\t${if (i % 3 == 0) "8111" + i % 10 else "54" + i}\tindustry $i"))
+    write("ce.datatype.tsv", Seq("data_type_code\tdata_type_text",
+      "01\tALL EMPLOYEES, THOUSANDS", "03\tAVERAGE HOURLY EARNINGS OF ALL EMPLOYEES"))
+    (d.toString, facts.size)
+  }
+
+  /** A tuned session whose scans read every file as one split. */
+  private lazy val oneSplit = {
+    val s = spark.newSession()
+    s.conf.set(org.apache.spark.sql.internal.SQLConf.FILES_OPEN_COST_IN_BYTES.key, 1L << 30)
+    graft.GraftSession.tune(s)
+  }
+
+  private def bigTables(s: org.apache.spark.sql.SparkSession) = {
+    val dir = bigDir._1
+    (CesIngest.readTsv(s, s"$dir/ce.data.tsv"),
+      CesIngest.canonicalize(CesIngest.readTsv(s, s"$dir/ce.series.tsv"),
+        Map("datatype_code" -> Seq("data_type_code"))),
+      CesIngest.readTsv(s, s"$dir/ce.industry.tsv"),
+      CesIngest.canonicalize(CesIngest.readTsv(s, s"$dir/ce.datatype.tsv"),
+        Map("datatype_code" -> Seq("data_type_code"), "datatype_text" -> Seq("data_type_text"))))
+  }
+
+  test("readTsv: a multi-MB file scans on every core, with the rows of a one-split read") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val (dir, nFacts) = bigDir
+    val split = CesIngest.readTsv(spark, s"$dir/ce.data.tsv")
+    val whole = CesIngest.readTsv(oneSplit, s"$dir/ce.data.tsv")
+    def scan(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    assert(stageTaskCounts(scan(split)) === Seq(spark.sparkContext.defaultParallelism))
+    assert(stageTaskCounts(scan(whole)) === Seq(1))
+    // every split after the first starts inside a record
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(s"$dir/ce.data.tsv"))
+    val starts = split.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s.inputRDD.partitions.toSeq.flatMap {
+        case p: FilePartition => p.files.map(_.start).toSeq
+      }
+    }.get
+    assert(starts.size === spark.sparkContext.defaultParallelism)
+    assert(starts.filter(_ > 0).forall(st => bytes(st.toInt - 1) != '\n'.toByte))
+    // header dropped once, every record read once
+    val a = split.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+    val b = whole.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+    assert(a.size === nFacts)
+    assert(a === b)
+    assert(split.filter(col("series_id").contains("series_id")).isEmpty)
+  }
+
+  test("extractProxy -> csvSingleFile: a split scan writes the bytes of a one-split scan") {
+    def proxyFile(s: org.apache.spark.sql.SparkSession): Array[Byte] = {
+      val (data, series, industry, datatype) = bigTables(s)
+      val e = CesPipeline.enrich(data, CesPipeline.buildDictionary(series, industry, datatype))
+      val out = Files.createTempDirectory("ces_split_proxy").resolve("out").toString
+      graft.sources.Sinks.csvSingleFile(CesPipeline.extractProxy(e, mechanic), out, Nil)
+      val parts = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv"))
+      assert(parts.length === 1)
+      Files.readAllBytes(parts.head.toPath)
+    }
+    val split = proxyFile(spark)
+    assert(split.sameElements(proxyFile(oneSplit)))
+    // the documented order, S/U ties broken by series_id
+    val rows = new String(split).split("\n").toSeq.tail
+      .map(_.split(",(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)", -1))
+    val keys = rows.map(r => (r(8), r(5), r(0), r(3)))
+    assert(rows.size === 20 * 2 * 2 * 25 * 12)
+    assert(keys === keys.sorted)
+  }
+
+  test("prepMain on a split scan agrees with a one-split scan within 1e-12 relative") {
+    val careers = Seq(mechanic, CesPipeline.Career("consulting", Nil, Seq("54")))
+    def collapse(s: org.apache.spark.sql.SparkSession) = {
+      val (data, series, industry, datatype) = bigTables(s)
+      CesPipeline.prepMain(data, series, industry, datatype, careers)
+        .orderBy("career", "date").collect().toSeq
+    }
+    val (a, b) = (collapse(spark), collapse(oneSplit))
+    assert(a.size === 2 * 25 * 12)
+    assert(a.map(r => (r.getString(0), r.get(1))) === b.map(r => (r.getString(0), r.get(1))))
+    def close(x: Double, y: Double) = math.abs(x - y) <= 1e-12 * math.max(math.abs(x), math.abs(y))
+    a.zip(b).foreach { case (x, y) =>
+      assert(close(x.getAs[Double]("employment_thousands"), y.getAs[Double]("employment_thousands")))
+      assert(close(x.getAs[Double]("avg_hourly_earnings"), y.getAs[Double]("avg_hourly_earnings")))
+    }
+  }
+
   test("prepMain golden: employment sum + employment-weighted earnings") {
     val (data, series, industry, datatype) = tables
     val out = CesPipeline.prepMain(data, series, industry, datatype, Seq(mechanic))
