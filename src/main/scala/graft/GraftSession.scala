@@ -10,13 +10,18 @@ import graft.sources.PosixLocalFileSystem
   * confs plus the codegen cache size below — works on any
   * externally-created session, e.g. the Verify/Bench runners).
   *
+  *  - session time zone UTC: the oracles are timezone-naive; see the
+  *    comment in `tune`.
   *  - `ansi.enabled=false`: the engine's pandas-parity contract is
   *    coerce-to-null (casts, div-by-zero), matching both the reference's
   *    `errors="coerce"` semantics and DuckDB's null results.
   *  - `nanosAsLong`: lets the parquet reader accept TIMESTAMP(NANOS)
   *    columns (see [[graft.sources.Tables.events]]).
-  *  - AQE on: runtime coalescing / skew-join handling is the 100 TB story;
-  *    harmless at test scale.
+  *  - AQE is left to Spark: its defaults (adaptive execution and
+  *    partition coalescing on) are the 100 TB story, and a caller's
+  *    explicit value is kept.
+  *  - streaming checkpoint file checksums off: Spark 4.1's async
+  *    checksum writer deadlocks stateful tasks in local mode.
   *  - codegen cache of [[CodegenCacheEntries]] classes: see the comment in
   *    `tune`.
   *  - file open cost of [[FileOpenCostBytes]] (Spark: 4 MB), so a text
@@ -52,12 +57,6 @@ object GraftSession {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // AQE is the 100 TB story (runtime coalescing, skew joins) and stays the
-    // default; GRAFT_AQE=false exists because at toy scale AQE's per-stage
-    // re-planning and codegen is a measurable fixed cost per query.
-    val aqe = sys.env.getOrElse("GRAFT_AQE", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
     // Spark 4.1's async checkpoint-file checksum writer deadlocks stateful
     // streaming tasks in local mode (all task threads park in
     // ChecksumCancellableFSDataOutputStream.close awaiting a pool that

@@ -42,8 +42,9 @@ private[graft] object EntryHelpers {
     * deterministic `orderBy` is produced as a single-partition local
     * sort instead of a range exchange + sampling pass. Identical rows,
     * identical total order; one fewer shuffle and two fewer jobs per
-    * query (measured in OptProbe, −0.25–0.35 s on mid-band grid
-    * queries). Row-scale outputs stay on [[tuned]] + global sort. */
+    * query (measured by a within-session A/B of the two final sorts at
+    * sf0.1: −0.25–0.35 s on mid-band grid queries). Row-scale outputs
+    * stay on [[tuned]] + global sort. */
   private[graft] def gridTuned(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     new TaggedQueryFn("grid",
       (s, d) => org.apache.spark.sql.graft.CompactOrder(f(GraftSession.tune(s), d)))

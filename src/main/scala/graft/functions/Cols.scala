@@ -105,37 +105,20 @@ object Cols {
   // ------------------------------------------------------------------
   // Portable hashing.
   //
-  // [[hash32]] is ALWAYS md5: bit-identical across engines (so every
-  // hash-derived operator is oracle-checkable in DuckDB via
-  // CAST('0x' || substring(md5(x),1,8) AS BIGINT)), and mode-independent
-  // so the RNG ([[graft.operators.MonteCarlo]]) and SRP hyperplanes
-  // ([[graft.sim.Similarity]]) never change under the production dial.
-  //
-  // The GRAFT_HASH=murmur3 dial applies ONLY to the text-dedup family
-  // (shingle/minhash/simhash/fingerprint kernels in
-  // [[graft.text.TextHash]] and the exact-dedup digest), where md5
-  // throughput on shingles dominates at corpus scale. The mode is
-  // resolved ONCE on the driver ([[HashMode]]) and captured into UDF
-  // closures at plan-build time — executors never read the env var, so a
-  // driver-only setting cannot produce mixed-mode signatures on a
-  // cluster. Correctness (Verify) runs must keep the md5 default: the
-  // oracle SQL is md5-shaped.
+  // Every hash the engine derives is md5: [[hash32]] here, the text-dedup
+  // kernels in [[graft.text.TextHash]] and the exact-dedup digest. md5 is
+  // bit-identical across engines, so every hash-derived operator (the
+  // RNG in [[graft.operators.MonteCarlo]], SRP hyperplanes in
+  // [[graft.sim.Similarity]], minhash/simhash signatures) is
+  // oracle-checkable in DuckDB via
+  // CAST('0x' || substring(md5(x),1,8) AS BIGINT).
   // ------------------------------------------------------------------
 
-  /** Hash mode for the text-dedup family (`GRAFT_HASH`: "md5" | "murmur3"),
-    * resolved once in the driver JVM. */
-  val HashMode: String = sys.env.getOrElse("GRAFT_HASH", "md5").toLowerCase
+  /** The engine's one hash function, "md5" (see above). */
+  val HashMode: String = "md5"
 
   /** Portable 32-bit md5 hash of a string column → long in [0, 2^32). */
-  def hash32(c: Column): Column = hash32InMode(c, "md5")
-
-  /** Mode-explicit form; "murmur3" is Spark's codegen'd `hash()` (seed 42)
-    * masked to the same [0, 2^32) range, so the affine-hash family
-    * composes identically. */
-  def hash32InMode(c: Column, mode: String): Column = mode match {
-    case "murmur3" => hash(c).cast("long").bitwiseAND(lit(0xFFFFFFFFL))
-    case _         => conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-  }
+  def hash32(c: Column): Column = conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
   /** Universal-hash family member over a hash32 value: (a·h + b) mod p with
     * prime p > 2^32. `a` is kept ≤ 2^20 so a·h < 2^52 — no long overflow

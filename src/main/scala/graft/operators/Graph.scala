@@ -45,25 +45,22 @@ object Graph {
     * `scale ÷ N`.
     *
     * Two regimes, the [[graft.text.Dedup.connectedComponents]] split:
-    * a distinct edge set at or under `driverMaxEdges` (dial:
-    * `GRAFT_PR_DRIVER_MAX`; 0 forces distributed) collects once and
-    * iterates IN the driver — integer sums are order-independent, so
-    * the kernel is bit-identical to the distributed loop (parity-
-    * specced) at none of its per-round broadcast/stage floors. Beyond
-    * the threshold the distributed loop below runs unchanged; the
-    * driver path is an optimization of the small-graph case, not the
-    * scale path. Admission is staged cheapest-first: when even the RAW
-    * row count (parquet-footer-served on a scan+project input) fits the
-    * threshold, the distinct shuffle is skipped too and dedup happens
-    * in the driver set. */
+    * a distinct edge set at or under `driverMaxEdges` (0 forces the
+    * distributed loop) collects once and iterates IN the driver —
+    * integer sums are order-independent, so the kernel is bit-identical
+    * to the distributed loop (parity-specced) at none of its per-round
+    * broadcast/stage floors. Beyond `driverMaxEdges` the distributed
+    * loop below runs unchanged; the driver path is an optimization of
+    * the small-graph case, not the scale path. Admission is staged
+    * cheapest-first: when even the RAW row count (parquet-footer-served
+    * on a scan+project input) fits `driverMaxEdges`, the distinct
+    * shuffle is skipped too and dedup happens in the driver set. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int = 5, scale: Long = 1000000000000L,
                broadcastMaxNodes: Long = 5000000L,
                driverMaxEdges: Long = 2000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val lvl = StorageLevel.MEMORY_AND_DISK
-    val threshold = sys.env.get("GRAFT_PR_DRIVER_MAX").map(_.toLong)
-      .getOrElse(driverMaxEdges)
     // Cheap admission probe for the driver regime: RAW row count upper-
     // bounds the distinct edge count, and on a scan+project frame
     // Catalyst serves count() from parquet footers (no data read). When
@@ -99,7 +96,7 @@ object Graph {
     val rawUpper =
       if (footerCountable(edges.queryExecution.analyzed)) edges.count()
       else Long.MaxValue
-    if (rawUpper <= threshold) {
+    if (rawUpper <= driverMaxEdges) {
       val raw = edges.select(col(srcCol).cast("string").as("src"),
           col(dstCol).cast("string").as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -118,7 +115,7 @@ object Graph {
       // not once per derivation
       .persist(lvl)
     val nEdges = e.count()
-    if (nEdges <= threshold) {
+    if (nEdges <= driverMaxEdges) {
       val out = pageRankDriver(edges.sparkSession,
         e.collect().map(r => (r.getString(0), r.getString(1))),
         iterations, scale)

@@ -122,9 +122,9 @@ object MonteCarlo {
   /** At-scale variant of [[fanKeyed]]: `percentile_approx` (a mergeable
     * quantile sketch with map-side partial aggregation) replaces exact
     * `percentile`, which must hold every group's full value set in one
-    * aggregation buffer. Same dial philosophy as GRAFT_HASH: exact stays
-    * the VERIFY default (oracle-comparable), the sketch is the production
-    * path when a fan spans billions of simulations. Rank error is bounded
+    * aggregation buffer. Exact stays the VERIFY default
+    * (oracle-comparable), the sketch is the production path when a fan
+    * spans billions of simulations. Rank error is bounded
     * by ~1/`accuracy`; MonteCarloSpec pins the observed gap vs the exact
     * fan. */
   def fanApproxKeyed(paths: DataFrame, keys: Seq[String] = Nil,

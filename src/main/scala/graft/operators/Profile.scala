@@ -465,7 +465,7 @@ object Profile {
     * |r_yz| = 1) emit null partial/verdict.
     *
     * `longSums = true` is the measured FAST PATH (12.8× at the 10×
-    * corpus — DialProbe, round 10: 10.28 s DECIMAL vs 0.80 s LONG; the
+    * corpus, round 10: 10.28 s DECIMAL vs 0.80 s LONG; the
     * nine 16-byte decimal sum buffers, not the arithmetic, were the
     * round-9 sweep's 6.95× outlier): the sums accumulate as plain
     * BIGINT, and a SOUND fail-loud fence guards exactness —

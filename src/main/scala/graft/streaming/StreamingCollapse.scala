@@ -17,20 +17,20 @@ import org.apache.spark.sql.types._
 object StreamingCollapse {
 
   /** Start `writer`, drain it to completion, stop — with
-    * `spark.sql.shuffle.partitions` temporarily lowered for the query's
-    * lifetime (GRAFT_STREAM_PARTITIONS, default 4). A stateful query
-    * creates one state store PER shuffle partition PER stateful operator
-    * at START; these bounded verify/bench drains hold a few thousand
-    * keys, so a 32-partition session buys nothing but state-store setup
-    * and maintenance cost (a stream-stream join at 32 partitions opens
-    * 128 stores for a 33-row result). Standing production streams size
+    * `spark.sql.shuffle.partitions` lowered to 4 for the query's
+    * lifetime. A stateful query creates one state store PER shuffle
+    * partition PER stateful operator at START; these bounded
+    * verify/bench drains hold a few thousand keys, so a 32-partition
+    * session buys nothing but state-store setup and maintenance cost (a
+    * stream-stream join at 32 partitions opens 128 stores for a 33-row
+    * result). Standing production streams size
     * their partitions to throughput at their own start and never pass
     * through here. Partition count only shapes the state layout — the
     * drained result is partition-count-independent. */
   private def drain(spark: SparkSession, writer: DataStreamWriter[_]): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "4"))
+    spark.conf.set(key, "4")
     try {
       val q = writer.start()
       try {
@@ -121,19 +121,21 @@ object StreamingCollapse {
     * schema branch (the testdata has shipped both TIMESTAMP(NANOS)-as-long
     * and TIMESTAMP(MICROS)). `readStream` needs an explicit schema, so the
     * actual file schema comes from one batch footer read; every downstream
-    * `ts div 1000` µs derivation then works unchanged on either encoding. */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    * `ts div 1000` µs derivation then works unchanged on either encoding.
+    *
+    * `maxFilesPerTrigger` bounds the ingestion rate — the production dial
+    * for stateful queries over a large landing backlog: draining a month
+    * of time-ordered files in ONE micro-batch means the watermark never
+    * advances mid-batch, so stream-stream joins hold the ENTIRE history
+    * per key and a Zipf-hot key pays O(n_k²) probe work (measured in the
+    * round-7 skew sweep, SURVEY §8). With per-batch file caps over
+    * time-ordered landing files, eviction keeps per-key state at the
+    * watermark horizon. None reads every landed file in one batch. */
+  private def eventsStream(spark: SparkSession, dir: String,
+                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val phys = physSchema(spark, dir, "events")
-    // Bounded ingestion rate — the production dial for stateful queries
-    // over a large landing backlog: draining a month of time-ordered files
-    // in ONE micro-batch means the watermark never advances mid-batch, so
-    // stream-stream joins hold the ENTIRE history per key and a Zipf-hot
-    // key pays O(n_k²) probe work (measured in the round-7 skew sweep,
-    // SURVEY §8). With per-batch file caps over time-ordered landing
-    // files, eviction keeps per-key state at the watermark horizon.
     val reader = spark.readStream.schema(phys)
-    sys.env.get("GRAFT_STREAM_MAX_FILES")
-      .foreach(n => reader.option("maxFilesPerTrigger", n))
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toLong))
     val raw = reader.parquet(streamDir(dir))
     if (phys("ts").dataType == LongType) raw
     else raw.withColumn("ts", expr("unix_micros(cast(ts as timestamp)) * 1000"))
@@ -647,13 +649,16 @@ object StreamingCollapse {
     * shape at scale; an unbounded stream-stream join would buffer both
     * streams forever). Inner join + append mode over a finite file stream
     * emits exactly the batch join result, so the oracle is the plain
-    * time-bounded self-join SQL. */
+    * time-bounded self-join SQL. `maxFilesPerTrigger` caps the landed
+    * files each micro-batch reads (see [[eventsStream]]); the rows do
+    * not depend on it. */
   def clickPurchaseJoin(spark: SparkSession, dir: String,
-                        windowMinutes: Int): DataFrame = {
+                        windowMinutes: Int,
+                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     graft.GraftSession.tune(spark)
     val name = "graft_stream_join"
     spark.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    def side(evType: String, pfx: String) = eventsStream(spark, dir)
+    def side(evType: String, pfx: String) = eventsStream(spark, dir, maxFilesPerTrigger)
       .filter(col("event_type") === evType)
       .select(col("user_id").as(s"${pfx}_user"),
         expr("timestamp_micros(ts div 1000)").as(s"${pfx}_ts"),
@@ -998,9 +1003,9 @@ object StreamingCollapse {
     * stage-0 event can lower t₀ and retroactively qualify an already-seen
     * stage-1 event this operator no longer holds). Per-batch sorting
     * handles intra-batch disorder; across batches the time-ordered
-    * landing convention (the `GRAFT_STREAM_MAX_FILES` discipline,
-    * SURVEY §8 skew sweep) is assumed — the same contract every
-    * watermark-evicted operator already rides on. */
+    * landing convention (the `maxFilesPerTrigger` discipline of
+    * [[clickPurchaseJoin]], SURVEY §8 skew sweep) is assumed — the same
+    * contract every watermark-evicted operator already rides on. */
   def streamingFunnel(spark: SparkSession, dir: String,
                       stages: Seq[String]): DataFrame = {
     val advances = funnelAdvances(spark, dir, stages)

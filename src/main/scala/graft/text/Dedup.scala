@@ -16,21 +16,16 @@ import graft.functions.Cols
   */
 object Dedup {
 
+  /** The exact-dedup digest, md5 of the trimmed text — shared by [[exact]]
+    * and the streaming form so the two dedup indexes key identically. The
+    * full 128-bit md5 is oracle-portable and far past the ~77k-doc
+    * birthday bound of a 32-bit hash. */
+  def exactDigest(textCol: Column): Column = md5(trim(textCol))
+
   /** Exact dedup: group identical normalized text, keep the smallest id.
     * One hash-shuffle on a fixed-width digest instead of the full document
     * — the at-scale trick is to shuffle hash(text), never text itself.
-    * Digest follows the GRAFT_HASH dial: md5 (default, oracle-portable) or
-    * xxhash64 (codegen'd, several times cheaper; 64-bit, NOT 32-bit
-    * murmur — exact dedup needs a collision margin far past the ~77k-doc
-    * 32-bit birthday bound). */
-  /** The dial-aware dedup digest — shared by [[exact]] and the streaming
-    * form so the two dedup indexes key identically under either mode. */
-  def exactDigest(textCol: Column): Column = {
-    val norm = trim(textCol)
-    if (graft.functions.Cols.HashMode == "murmur3") xxhash64(norm).cast("string")
-    else md5(norm)
-  }
-
+    * The digest is [[exactDigest]]. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     docs
       .select(col(idCol), exactDigest(col(textCol)).as("text_hash"))
@@ -671,19 +666,17 @@ object Dedup {
     *    round per action).
     *
     * Output: (id, component) for every node that appears in an edge;
-    * `component` = the minimum node id in the component. `GRAFT_CC_DRIVER_MAX`
-    * overrides the regime threshold (0 forces the distributed path). */
+    * `component` = the minimum node id in the component. `driverMaxEdges`
+    * is the regime threshold (0 forces the distributed path). */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 25,
                           driverMaxEdges: Long = 2000000L): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val threshold = sys.env.get("GRAFT_CC_DRIVER_MAX").map(_.toLong)
-      .getOrElse(driverMaxEdges)
     val eDistinct = e.distinct().persist(lvl)
     val nEdges = eDistinct.count()
-    if (nEdges <= threshold) {
+    if (nEdges <= driverMaxEdges) {
       val spark = edges.sparkSession
       val out = unionFind(eDistinct.collect().map(r => (r.getLong(0), r.getLong(1))))
       eDistinct.unpersist()
@@ -734,10 +727,7 @@ object Dedup {
       // 1.2s → 4.8s → 90s per round before the barrier). The frames are
       // id-pair sized, so the non-codegen RDD hop costs nothing.
       val next = spark.createDataFrame(nextPlan.rdd, nextPlan.schema).persist(lvl)
-      val t0 = System.nanoTime()
       val nextSum = labelSum(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $it sum=$nextSum took ${(System.nanoTime() - t0) / 1e9}%.2fs")
       stepped.unpersist()
       labels.unpersist()
       labels = next

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions.udf
   * other — a custom Expression would buy nothing here because the md5 calls
   * dominate, so the UDF is the right point on the curve.
   *
-  * All hashes remain md5-derived (not Murmur3 `hash()`): portable, so every
-  * derived operator stays oracle-checkable in DuckDB via
+  * Every hash here is md5-derived, the engine's one hash
+  * ([[graft.functions.Cols.HashMode]]): portable, so every derived
+  * operator stays oracle-checkable in DuckDB via
   * `CAST('0x' || substring(md5(x),1,8) AS BIGINT)`.
   */
 object TextHash {
@@ -31,19 +32,9 @@ object TextHash {
   private val mdLocal: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** Mode dispatch for the text-dedup kernels. The mode string is
-    * CAPTURED ON THE DRIVER at plan-build time (see the Column APIs below)
-    * and shipped in the UDF closure — executors never consult the env var,
-    * so driver/executor modes cannot diverge on a cluster. */
-  def hash32(s: String, mode: String): Long =
-    if (mode == "murmur3") hash32Murmur(s) else hash32Md5(s)
-
-  /** md5 hash32 — the mode-independent form for callers outside the dedup
-    * family (SRP hyperplanes, RNG counters, checkpoint keys). */
-  def hash32(s: String): Long = hash32Md5(s)
-
-  /** First 8 hex chars of md5(s) as unsigned long (the verify default). */
-  def hash32Md5(s: String): Long = {
+  /** First 8 hex chars of md5(s) as unsigned long — the JVM twin of
+    * [[graft.functions.Cols.hash32]]. */
+  def hash32(s: String): Long = {
     val md = mdLocal.get()
     md.reset()
     val d = md.digest(s.getBytes(StandardCharsets.UTF_8))
@@ -54,9 +45,7 @@ object TextHash {
     * Used where 32 bits would hit the birthday bound — e.g. corpus-wide
     * n-gram keys: ~1M distinct grams has a ~12% chance of a 32-bit
     * collision but ~4e-7 at 60 bits. Oracle-portable as
-    * `CAST('0x' || substring(md5(x), 1, 15) AS BIGINT)`. At 100 TB swap
-    * for Spark's codegen'd `xxhash64` (same width, no md5 cost) — the
-    * same dial as [[graft.text.Dedup.exactDigest]]. */
+    * `CAST('0x' || substring(md5(x), 1, 15) AS BIGINT)`. */
   def hash60Md5(s: String): Long = {
     val md = mdLocal.get()
     md.reset()
@@ -67,32 +56,6 @@ object TextHash {
     // 7 bytes = 56 bits, plus the high nibble of byte 7 -> 60 bits
     (acc << 4) | ((d(7) & 0xf0L) >> 4)
   }
-
-  /** Spark `hash()` (Murmur3_x86_32, seed 42) over the UTF-8 bytes,
-    * masked to [0, 2^32) — the production-scale mode. */
-  def hash32Murmur(s: String): Long = {
-    val b = s.getBytes(StandardCharsets.UTF_8)
-    org.apache.spark.unsafe.hash.Murmur3_x86_32
-      .hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42)
-      .toLong & 0xFFFFFFFFL
-  }
-
-  /** Mode-dispatched 60-bit token hash — the wide-signature source for
-    * [[simhash]] with bits > 32 (the 32-bit hash leaves high vote bits
-    * permanently unset, see simhash). md5: [[hash60Md5]]; murmur3: the
-    * seed-42 word as the low 32 bits plus a seed-43 pass for the high
-    * 28 (both still one cheap pass at production scale). */
-  def hash60(s: String, mode: String): Long =
-    if (mode == "murmur3") {
-      val b = s.getBytes(StandardCharsets.UTF_8)
-      val lo = org.apache.spark.unsafe.hash.Murmur3_x86_32
-        .hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42)
-        .toLong & 0xFFFFFFFFL
-      val hi = org.apache.spark.unsafe.hash.Murmur3_x86_32
-        .hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 43)
-        .toLong & 0xFFFFFFFL
-      lo | (hi << 32)
-    } else hash60Md5(s)
 
   /** Spark's `trim()` strips ASCII SPACE only — Java's `String.trim` strips
     * every control char ≤ 0x20, so a doc with a leading tab would tokenize
@@ -133,8 +96,8 @@ object TextHash {
   }
 
   /** Hashes of word k-shingles; fewer than k tokens -> empty. Matches
-    * `transform(Cols.shingles(tokens, k), hash32)` in md5 mode. */
-  def shingleHashes(text: String, k: Int, mode: String = "md5"): Array[Long] = {
+    * `transform(Cols.shingles(tokens, k), hash32)`. */
+  def shingleHashes(text: String, k: Int): Array[Long] = {
     val toks = tokenize(text)
     if (toks.length < k) Array.emptyLongArray
     else {
@@ -145,7 +108,7 @@ object TextHash {
         sb.setLength(0)
         var j = 0
         while (j < k) { if (j > 0) sb.append(' '); sb.append(toks(i + j)); j += 1 }
-        out(i) = hash32(sb.toString, mode)
+        out(i) = hash32(sb.toString)
         i += 1
       }
       out
@@ -183,11 +146,11 @@ object TextHash {
   /** Full k-component minhash signature in one traversal; docs shorter than
     * the shingle width fall back to the whole-trimmed-text hash (same as the
     * expression form's coalesce). */
-  def minhashSig(text: String, k: Int, shingleK: Int, mode: String = "md5"): Array[Long] = {
-    val hs = shingleHashes(text, shingleK, mode)
+  def minhashSig(text: String, k: Int, shingleK: Int): Array[Long] = {
+    val hs = shingleHashes(text, shingleK)
     val out = new Array[Long](k)
     if (hs.isEmpty) {
-      java.util.Arrays.fill(out, hash32(sparkTrim(text), mode))
+      java.util.Arrays.fill(out, hash32(sparkTrim(text)))
     } else {
       var i = 0
       while (i < k) {
@@ -210,7 +173,7 @@ object TextHash {
     * [[Dedup.simhash]]'s expression semantics (votes > 0 -> bit set).
     *
     * bits ≤ 32 votes over the 32-bit token hash (unchanged legacy
-    * widths); 32 < bits ≤ 60 votes over [[hash60]] so every bit has a
+    * widths); 32 < bits ≤ 60 votes over [[hash60Md5]] so every bit has a
     * real vote source — found by measurement in round 17: the old code
     * read bits 32+ of a 32-bit hash, leaving the high bands of a
     * "wide" signature constant 0, which silently turned the documented
@@ -218,15 +181,14 @@ object TextHash {
     * keeps the per-token hash oracle-portable
     * (`CAST('0x' || substring(md5(x), 1, 15) AS BIGINT)` — positive
     * BIGINT, the [[hash60Md5]] convention). */
-  def simhash(text: String, bits: Int, mode: String = "md5"): Long = {
+  def simhash(text: String, bits: Int): Long = {
     require(bits <= 60,
       s"simhash supports at most 60 bits (oracle-portable hash60 votes), got $bits")
     val toks = tokenize(text)
     val votes = new Array[Int](bits)
     var i = 0
     while (i < toks.length) {
-      val h = if (bits <= 32) hash32(toks(i), mode)
-              else hash60(toks(i), mode)
+      val h = if (bits <= 32) hash32(toks(i)) else hash60Md5(toks(i))
       var b = 0
       while (b < bits) {
         if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
@@ -242,30 +204,21 @@ object TextHash {
 
   /** Min shingle-hash fingerprint with whole-text fallback — matches
     * [[TextAnalysis.fingerprint]]'s expression semantics. */
-  def fingerprint(text: String, shingleK: Int, mode: String = "md5"): Long = {
-    val hs = shingleHashes(text, shingleK, mode)
-    if (hs.isEmpty) hash32(sparkTrim(text), mode) else hs.min
+  def fingerprint(text: String, shingleK: Int): Long = {
+    val hs = shingleHashes(text, shingleK)
+    if (hs.isEmpty) hash32(sparkTrim(text)) else hs.min
   }
 
   // ------------------------------------------------------------- Column API
-  //
-  // Each builder reads Cols.HashMode ONCE, here on the driver, and the
-  // resulting `mode` string rides in the UDF closure to the executors.
 
-  def minhashSigCol(text: Column, k: Int, shingleK: Int = 3): Column = {
-    val mode = graft.functions.Cols.HashMode
-    udf((t: String) => if (t == null) null else minhashSig(t, k, shingleK, mode)).apply(text)
-  }
+  def minhashSigCol(text: Column, k: Int, shingleK: Int = 3): Column =
+    udf((t: String) => if (t == null) null else minhashSig(t, k, shingleK)).apply(text)
 
-  def simhashCol(text: Column, bits: Int): Column = {
-    val mode = graft.functions.Cols.HashMode
-    udf((t: String) => if (t == null) null else Long.box(simhash(t, bits, mode))).apply(text)
-  }
+  def simhashCol(text: Column, bits: Int): Column =
+    udf((t: String) => if (t == null) null else Long.box(simhash(t, bits))).apply(text)
 
-  def fingerprintCol(text: Column, shingleK: Int = 3): Column = {
-    val mode = graft.functions.Cols.HashMode
-    udf((t: String) => if (t == null) null else Long.box(fingerprint(t, shingleK, mode))).apply(text)
-  }
+  def fingerprintCol(text: Column, shingleK: Int = 3): Column =
+    udf((t: String) => if (t == null) null else Long.box(fingerprint(t, shingleK))).apply(text)
 
   /** String shingles (no hashing) — corpus decontamination / vocabulary
     * statistics paths. */

@@ -20,8 +20,8 @@ import org.apache.spark.sql.classic.Dataset
   * dependency) and so does the `RangePartitioner` sampling pass over the
   * sort input — the optimization guide's §2.4 "orderBy used only to make
   * output deterministic" accidental shuffle. Measured on the bench
-  * session shape (sf0.1, local[32]): −0.25–0.35 s and −2 jobs per
-  * mid-band grid query (OptProbe).
+  * session shape (sf0.1, local[32]) by a within-session A/B of the two
+  * final sorts: −0.25–0.35 s and −2 jobs per mid-band grid query.
   *
   * ONLY valid for queries whose output is CONTRACT-BOUNDED (key grids,
   * top-k, calendar months, fixed bins): the single sort task must hold
@@ -61,18 +61,17 @@ object CompactOrder {
   def onePartition(df: DataFrame): DataFrame =
     localSortInOnePartition(df, shuffle = true).getOrElse(df.coalesce(1))
 
-  /** Plan-introspection escape for [[staged]]: while > 0 (or with
-    * `GRAFT_UNSTAGED=1` in the environment, the A/B measurement switch),
-    * `staged` is the identity, so plan contracts (PlanSpec) and plan
-    * dumps see the REAL child plan instead of the checkpoint's opaque
-    * `LogicalRDD`. The round-17 snapshot shipped without this and made
-    * 10 pinned plan contracts unobservable (q11 PushedFilters, q29
-    * ReadSchema, …) — worse, their negative assertions passed vacuously.
-    * The depth is per thread: an introspected build on one thread leaves
-    * staging on for frames built concurrently on others. */
+  /** Plan-introspection escape for [[staged]]: while > 0, `staged` is
+    * the identity, so plan contracts (PlanSpec) and plan dumps see the
+    * REAL child plan instead of the checkpoint's opaque `LogicalRDD`, and
+    * a staging A/B (`StagingAB`) builds the unstaged twin in the same
+    * JVM. The round-17 snapshot shipped without this and made 10 pinned
+    * plan contracts unobservable (q11 PushedFilters, q29 ReadSchema, …)
+    * — worse, their negative assertions passed vacuously. The depth is
+    * per thread: an introspected build on one thread leaves staging on
+    * for frames built concurrently on others. */
   private val introspectDepth = ThreadLocal.withInitial[Int](() => 0)
-  private val unstagedEnv = sys.env.get("GRAFT_UNSTAGED").contains("1")
-  private[graft] def introspecting: Boolean = introspectDepth.get > 0 || unstagedEnv
+  private[graft] def introspecting: Boolean = introspectDepth.get > 0
   def introspected[T](f: => T): T = {
     introspectDepth.set(introspectDepth.get + 1)
     try f finally introspectDepth.set(introspectDepth.get - 1)

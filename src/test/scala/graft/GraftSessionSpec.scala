@@ -5,6 +5,7 @@ import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf.FILES_OPEN_COST_IN_BYTES
 import org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
 
@@ -31,6 +32,24 @@ class GraftSessionSpec extends SparkSpec {
       .setConfString(CODEGEN_CACHE_MAX_ENTRIES.key, "5000")
     GraftSession.tune(s)
     assert(cacheEntries(s) == 5000)
+  }
+
+  test("tune leaves adaptive execution and partition coalescing on") {
+    val s = GraftSession.tune(spark.newSession())
+    assert(state(s).conf.adaptiveExecutionEnabled)
+    assert(state(s).conf.coalesceShufflePartitionsEnabled)
+  }
+
+  test("tune keeps a caller's explicit adaptive execution off") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    GraftSession.tune(s)
+    assert(!state(s).conf.adaptiveExecutionEnabled)
+    assert(!state(s).conf.coalesceShufflePartitionsEnabled)
+    val plan = s.range(100).groupBy(col("id") % 3).count().queryExecution.executedPlan
+    assert(!plan.isInstanceOf[AdaptiveSparkPlanExec], plan.toString)
   }
 
   test("tune sets the file open cost and keeps a caller's explicit value") {

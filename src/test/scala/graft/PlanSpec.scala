@@ -523,9 +523,6 @@ class PlanSpec extends SparkSpec {
   test("rowTuned staging (q214): checkpoint sits UNDER a retained global sort; " +
     "introspection exposes the full child plan") {
     import org.apache.spark.sql.catalyst.plans.logical.Sort
-    // GRAFT_UNSTAGED=1 (the staging A/B switch) turns staging off, so
-    // there is no staged plan to pin
-    assume(!sys.env.get("GRAFT_UNSTAGED").contains("1"))
     // production frame: root must still be the distributed global Sort
     // (row-scale outputs keep their range exchange), its child the lazy
     // checkpoint's LogicalRDD — the one-compute-instead-of-two staging

@@ -108,19 +108,21 @@ object SkewSweep {
 
     val uniDir = s"$base/uniform"; val zipfDir = s"$base/zipf"
 
-    // `ordered` mode (run with GRAFT_STREAM_MAX_FILES set): ONLY the
-    // steady-state watermark-eviction probe — the env var would distort
-    // every other streaming step, so it gets its own invocation.
+    // `ordered [maxFilesPerTrigger]` mode: ONLY the steady-state
+    // watermark-eviction probe, the stream-stream join over time-ordered
+    // landing files with the per-batch file cap of the second argument.
     if (args.headOption.contains("ordered")) {
+      val maxFiles = args.lift(1).map(_.toInt)
       val orderedDir = s"$base/zipf_ordered"
       if (!new java.io.File(s"$orderedDir/events.parquet").isDirectory) {
         spark.read.parquet(s"$zipfDir/events.parquet")
           .repartitionByRange(30, col("ts")).sortWithinPartitions("ts")
           .write.mode("overwrite").parquet(s"$orderedDir/events.parquet")
       }
-      val t = time(streaming.StreamingCollapse.clickPurchaseJoin(spark, orderedDir, windowMinutes = 30)
+      val t = time(streaming.StreamingCollapse.clickPurchaseJoin(spark, orderedDir,
+          windowMinutes = 30, maxFilesPerTrigger = maxFiles)
         .write.format("noop").mode("overwrite").save())
-      println(f"DIAL  clickPurchaseJoin(30 min, maxFilesPerTrigger=${sys.env.getOrElse("GRAFT_STREAM_MAX_FILES", "?")}) zipf=$t%6.2f s")
+      println(f"DIAL  clickPurchaseJoin(30 min, maxFilesPerTrigger=${maxFiles.getOrElse("none")}) zipf=$t%6.2f s")
       spark.stop(); return
     }
     // `hot100` mode: one decade past the Zipf sweep — a SINGLE user owns

@@ -81,6 +81,54 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.toSeq === batch.toSeq)
   }
 
+  test("clickPurchaseJoin: maxFilesPerTrigger = 1 drains a multi-file landing " +
+    "directory in one micro-batch per file, with the rows of the uncapped call") {
+    import java.nio.file.{Files, Path}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    // the sf0.001 events as a landing directory of time-ordered files: each
+    // range partition of ts is one file, and the files' modification times
+    // follow ts, the order a file stream reads them in
+    val dir = Files.createTempDirectory("graft_landing")
+    val landing = dir.resolve("events.parquet")
+    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+      .repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
+      .write.parquet(landing.toString)
+    val files = Files.list(landing).toArray.toSeq.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.getFileName.toString)
+    assert(files.size > 1)
+    val t0 = System.currentTimeMillis() - 3600000L
+    files.zipWithIndex.foreach { case (f, i) =>
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(t0 + i * 10000L))
+    }
+    val dataBatches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == "graft_stream_join" && e.progress.numInputRows > 0)
+          dataBatches.incrementAndGet()
+    }
+    def batchesOf(f: => Array[org.apache.spark.sql.Row]) = {
+      dataBatches.set(0)
+      val rows = f
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      (rows, dataBatches.get)
+    }
+    spark.streams.addListener(listener)
+    try {
+      val (all, allBatches) = batchesOf(
+        clickPurchaseJoin(spark, dir.toString, windowMinutes = 60).collect())
+      val (capped, cappedBatches) = batchesOf(
+        clickPurchaseJoin(spark, dir.toString, windowMinutes = 60,
+          maxFilesPerTrigger = Some(1)).collect())
+      assert(allBatches == 1)
+      assert(cappedBatches == files.size)
+      assert(all.nonEmpty, "join must be non-vacuous on the landing files")
+      assert(capped.toSeq === all.toSeq)
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("enrichedEventStats: stream-static join equals the batch enrichment aggregate") {
     val dir = "/root/testdata/sf0.001"
     val streamed = enrichedEventStats(spark, dir).collect()

@@ -45,18 +45,4 @@ class TextHashParitySpec extends SparkSpec {
     val spec = vals.select(graft.functions.Cols.hash32(col("s"))).as[Long].collect().toSeq
     assert(fast === spec)
   }
-
-  test("murmur3 mode: JVM twin == hash() expression, same [0, 2^32) range") {
-    import graft.functions.Cols
-    val df = Seq("", "a", "the quick brown fox", "tab\there", "unicode \u00e9\u4e2d")
-      .toDF("s")
-      .withColumn("h_expr", Cols.hash32InMode(col("s"), "murmur3"))
-    df.collect().foreach { r =>
-      val s0 = r.getString(0)
-      val expect = TextHash.hash32Murmur(s0)
-      val got = r.getLong(1)
-      assert(got == expect, s"'$s0': expr=$got jvm=$expect")
-      assert(got >= 0L && got < (1L << 32))
-    }
-  }
 }
