@@ -187,11 +187,13 @@ object Bench {
         errKinds.computeIfAbsent(key,
           _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
     }
-    def timedPass(): Map[String, Double] =
-      queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        currentQuery = name
+    // One timed run of each of `names` in name order, tagged `tag + name`
+    // in the error log.
+    def timedPass(names: Iterable[String], tag: String = ""): Map[String, Double] =
+      names.toSeq.sorted.map { name =>
+        currentQuery = tag + name
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable => recordFailure(name, e) }
         val elapsed = (System.nanoTime() - t0) / 1e9
         // release OUTSIDE the timed window (async unpersist message; r17
@@ -204,8 +206,8 @@ object Bench {
     // non-reproducible 5-10x outliers on single runs (BENCH_r01 q32 36.7s
     // vs 1.3s steady-state); the min of two is the steady-state number the
     // plan actually earns.
-    val p1 = timedPass()
-    val p2 = timedPass()
+    val p1 = timedPass(queries.keys)
+    val p2 = timedPass(queries.keys)
     val min2 = p1.map { case (k, v) => k -> math.min(v, p2.getOrElse(k, v)) }
     // Queries still slow after min-of-2 get a THIRD pass: r07 recorded two
     // queries ~1.9x slower than r06 on byte-identical code (GC/scheduling
@@ -213,17 +215,7 @@ object Bench {
     // is indistinguishable from regression on the record of trust. Re-timing
     // just the >2s survivors bounds the extra cost to the top handful.
     val slow = min2.filter(_._2 > 2.0).keySet
-    val p3: Map[String, Double] =
-      if (slow.isEmpty) Map.empty
-      else queries.filter(q => slow(q._1)).toSeq.sortBy(_._1).map { case (name, fn) =>
-        currentQuery = s"pass3:$name"
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => recordFailure(name, e) }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.CompactOrder.releaseStaged()
-        name -> elapsed
-      }.toMap
+    val p3 = timedPass(slow, "pass3:")
     val results = min2.map { case (k, v) => k -> math.min(v, p3.getOrElse(k, v)) }
     val calEnd = calibrationProbe("end")
     // Single-run provenance: the same run_id lands in the compact stdout

@@ -885,7 +885,7 @@ private[graft] object QueriesA {
 
     // ---- extension: hive-partitioned sink + partition-pruned readback —
     // write documents partitioned by source, read ONE partition back; the
-    // scan must touch only that directory (PartitionedSinkSpec pins the
+    // scan must touch only that directory (SinksSpec pins the
     // PartitionFilters plan contract); oracle = the same aggregate
     // straight off the unpartitioned table, so the layout must be lossless
     "q91_x_partitioned_sink" -> gridTuned((s, d) => {
@@ -893,7 +893,7 @@ private[graft] object QueriesA {
       val key = graft.text.TextHash.hash32(d).toHexString
       val path = s"${sys.props("java.io.tmpdir")}/graft_part_$key"
       cleanupOnExit(path)
-      graft.sources.Sinks.writePartitioned(docs, path, Seq("source"))
+      graft.sources.Sinks.parquetPartitioned(docs, path, Seq("source"))
       s.read.parquet(path)
         .filter(col("source") === "src3")
         .groupBy("lang")

@@ -33,11 +33,18 @@ object Sinks {
       .write.mode("overwrite").option("header", "true").csv(path)
   }
 
-  /** S7 at scale: parquet partitioned by key columns — the fan-out shape
-    * that replaces per-career files (each key's rows land in its own
-    * directory, readable with partition pruning). */
-  def parquetPartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+  /** S7 at scale: Hive-style parquet partitioned by key columns — the
+    * fan-out shape that replaces per-career files. Each key's rows land
+    * in their own directory, so a reader filtering on the partition
+    * columns touches only the matching directories, never the rest of
+    * the corpus (the difference between scanning 100 TB and scanning one
+    * domain's slice). Partition columns should be low-cardinality
+    * (career, source, date, lang) — a high-cardinality partition key
+    * degenerates into millions of small files. */
+  def parquetPartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+    require(partitionCols.nonEmpty, "parquetPartitioned needs >= 1 partition column")
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+  }
 
   /** JSONL sink — the interchange format of LLM training corpora (one
     * JSON object per line). Plain `df.write.json`: each task writes its
@@ -95,19 +102,6 @@ object Sinks {
     spark.read.schema(schema).option("rowTag", rowTag)
       .option("ignoreSurroundingSpaces", "false")
       .option("mode", "PERMISSIVE").format("xml").load(path)
-
-  /** Hive-style partitioned parquet sink — the layout that makes
-    * partition PRUNING possible at read time: a reader filtering on the
-    * partition columns touches only the matching directories, never the
-    * rest of the corpus (the difference between scanning 100 TB and
-    * scanning one domain's slice). Partition columns should be
-    * low-cardinality (source, date, lang) — a high-cardinality partition
-    * key degenerates into millions of small files. */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String]): Unit = {
-    require(partitionCols.nonEmpty, "writePartitioned needs >= 1 partition column")
-    parquetPartitioned(df, path, partitionCols)
-  }
 
   /** F7: empty-result guard (reference warns and skips the write —
     * load_CES_pandas.py:261-267). Returns true when written. */

@@ -8,10 +8,8 @@ import org.apache.spark.sql.types._
   * "the one place the engine is deliberately hybrid" — except it is not
   * hybrid here: instead of collecting series to the driver like the
   * reference, each key's series is assembled and analyzed INSIDE its
-  * executor via `groupByKey.mapGroups`. A 1000-executor cluster runs a
-  * million independent series fits with no driver involvement; each series
-  * is assumed small enough for one task (true by construction for monthly
-  * data — centuries fit in KBs).
+  * executor by [[perSeries]], so a 1000-executor cluster runs a million
+  * independent series fits with no driver involvement.
   */
 object Diagnostics {
 
@@ -49,9 +47,25 @@ object Diagnostics {
     (sorted.map(_._4), sorted.map(_._5))
   }
 
-  /** Sort a group's rows chronologically and return the value series. */
-  private def series(it: Iterator[(String, String, Option[Double], Double, Double)]): Array[Double] =
-    seriesX(it)._1
+  /** Run `kernel` on every key's series, inside the executor that holds
+    * the key: [[slim]] the rows, shuffle once on the key, sort each group
+    * chronologically ([[seriesX]]) and hand the kernel (key, value series,
+    * exog series); its rows are encoded with `schema`. No series reaches
+    * the driver, and each is assumed small enough for one task (true by
+    * construction for monthly data — centuries fit in KBs), so a million
+    * series scale like a million-row shuffle. Without `exogCol` the exog
+    * series is all zeros. */
+  private def perSeries(df: DataFrame, keyCols: Seq[String], orderCol: String,
+                        valueCol: String, exogCol: Option[String],
+                        schema: StructType)(
+      kernel: (String, Array[Double], Array[Double]) => Iterator[Row]): DataFrame =
+    slim(df, keyCols, orderCol, valueCol, exogCol)
+      .groupByKey(_._1)(Encoders.STRING)
+      .flatMapGroups { (key, it) =>
+        val (y, x) = seriesX(it)
+        kernel(key, y, x)
+      }(Encoders.row(schema))
+      .toDF()
 
   private val statsSchema = StructType(Seq(
     StructField("key", StringType),
@@ -70,22 +84,18 @@ object Diagnostics {
     * null in that column. */
   def stationarity(df: DataFrame, keyCols: Seq[String], orderCol: String,
                    valueCol: String): DataFrame = {
-    val grouped = slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .mapGroups { (key, it) =>
-        val series = Diagnostics.series(it)
-        val n = series.length
-        val adfR = if (n >= 12) Some(TimeSeriesStats.adf(series)) else None
-        val kpssR = if (n >= 8) Some(TimeSeriesStats.kpss(series)) else None
-        val yj = if (n >= 3) Some(TimeSeriesStats.yeoJohnsonLambda(series)) else None
-        val per = if (n >= 4) Some(TimeSeriesStats.seasonalPeriod(series)) else None
-        Row(key, n,
-          adfR.map(_.stat).orNull, adfR.map(_.lag).orNull,
-          adfR.map(_.stationary5).orNull,
-          kpssR.map(_.stat).orNull, kpssR.map(_.stationary5).orNull,
-          yj.orNull, per.orNull)
-      }(Encoders.row(statsSchema))
-    grouped.toDF()
+    perSeries(df, keyCols, orderCol, valueCol, None, statsSchema) { (key, series, _) =>
+      val n = series.length
+      val adfR = if (n >= 12) Some(TimeSeriesStats.adf(series)) else None
+      val kpssR = if (n >= 8) Some(TimeSeriesStats.kpss(series)) else None
+      val yj = if (n >= 3) Some(TimeSeriesStats.yeoJohnsonLambda(series)) else None
+      val per = if (n >= 4) Some(TimeSeriesStats.seasonalPeriod(series)) else None
+      Iterator.single(Row(key, n,
+        adfR.map(_.stat).orNull, adfR.map(_.lag).orNull,
+        adfR.map(_.stationary5).orNull,
+        kpssR.map(_.stat).orNull, kpssR.map(_.stationary5).orNull,
+        yj.orNull, per.orNull))
+    }
   }
 
   private val acfSchema = StructType(Seq(
@@ -98,19 +108,15 @@ object Diagnostics {
     * nlags 48-60). One row per (key, lag). */
   def correlogram(df: DataFrame, keyCols: Seq[String], orderCol: String,
                   valueCol: String, nlags: Int): DataFrame = {
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val series = Diagnostics.series(it)
-        val k = math.min(nlags, series.length - 2)
-        if (k < 1) Iterator.empty
-        else {
-          val a = TimeSeriesStats.acf(series, k)
-          val p = TimeSeriesStats.pacf(series, k)
-          (1 to k).iterator.map(l => Row(key, l, a(l - 1), p(l - 1)))
-        }
-      }(Encoders.row(acfSchema))
-      .toDF()
+    perSeries(df, keyCols, orderCol, valueCol, None, acfSchema) { (key, series, _) =>
+      val k = math.min(nlags, series.length - 2)
+      if (k < 1) Iterator.empty
+      else {
+        val a = TimeSeriesStats.acf(series, k)
+        val p = TimeSeriesStats.pacf(series, k)
+        (1 to k).iterator.map(l => Row(key, l, a(l - 1), p(l - 1)))
+      }
+    }
   }
 
   private val arSchema = StructType(Seq(
@@ -130,23 +136,19 @@ object Diagnostics {
   def arForecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
                  valueCol: String, horizon: Int,
                  orders: Seq[Int] = Seq(1, 2, 3)): DataFrame = {
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val series = Diagnostics.series(it)
-        // a key no candidate order can fit (too short, or degenerate-
-        // singular designs) yields no forecast rows instead of failing
-        // the whole job (mirrors stationarity's nulls)
-        TimeSeriesStats.fitArByAicOption(series, orders) match {
-          case None => Iterator.empty
-          case Some(fit) =>
-            TimeSeriesStats.forecastAr(fit, series, horizon).zipWithIndex.iterator
-              .map { case (f, i) =>
-                Row(key, fit.order, fit.intercept, fit.sigma2, fit.aic, i + 1, f)
-              }
-        }
-      }(Encoders.row(arSchema))
-      .toDF()
+    perSeries(df, keyCols, orderCol, valueCol, None, arSchema) { (key, series, _) =>
+      // a key no candidate order can fit (too short, or degenerate-
+      // singular designs) yields no forecast rows instead of failing
+      // the whole job (mirrors stationarity's nulls)
+      TimeSeriesStats.fitArByAicOption(series, orders) match {
+        case None => Iterator.empty
+        case Some(fit) =>
+          TimeSeriesStats.forecastAr(fit, series, horizon).zipWithIndex.iterator
+            .map { case (f, i) =>
+              Row(key, fit.order, fit.intercept, fit.sigma2, fit.aic, i + 1, f)
+            }
+      }
+    }
   }
 
   private val sarxSchema = StructType(Seq(
@@ -175,68 +177,62 @@ object Diagnostics {
     * kernel-vs-SQL sum-order last-bit noise (pre-scale y and x to
     * O(1–100) magnitudes upstream, the q117 convention).
     *
-    * Scale shape: [[arForecast]]'s — each key's series fits inside its
-    * executor via `groupByKey.flatMapGroups`; a million series is a
-    * million independent O(n) kernels. Singular designs (constant
-    * regressors, n < 5) yield no rows. Output: one row per
+    * Scale shape: [[perSeries]], O(n) per series. Singular designs
+    * (constant regressors, n < 5) yield no rows. Output: one row per
     * (key, step 1..horizon) with `n_obs` and the three fitted
     * coefficients on every row. */
   def sarxForecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
                    valueCol: String, exogCol: String,
                    horizon: Int): DataFrame = {
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    slim(df, keyCols, orderCol, valueCol, Some(exogCol))
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val (y, x) = seriesX(it)
-        val n = y.length
-        if (n < 5) Iterator.empty
+    perSeries(df, keyCols, orderCol, valueCol, Some(exogCol), sarxSchema) { (key, y, x) =>
+      val n = y.length
+      if (n < 5) Iterator.empty
+      else {
+        var cnt = 0.0; var sl = 0.0; var sx = 0.0; var sy = 0.0
+        var sll = 0.0; var slx = 0.0; var sxx = 0.0; var sly = 0.0
+        var sxy = 0.0
+        var t = 1
+        while (t < n) {
+          val l = y(t - 1); val xv = x(t); val yv = y(t)
+          cnt += 1; sl += l; sx += xv; sy += yv
+          sll += l * l; slx += l * xv; sxx += xv * xv
+          sly += l * yv; sxy += xv * yv
+          t += 1
+        }
+        // det3 cofactor expansion — ONE written order, mirrored
+        // term-for-term in the q336 oracle
+        def det3(a11: Double, a12: Double, a13: Double,
+                 a21: Double, a22: Double, a23: Double,
+                 a31: Double, a32: Double, a33: Double): Double =
+          a11 * (a22 * a33 - a23 * a32) - a12 * (a21 * a33 - a23 * a31) +
+            a13 * (a21 * a32 - a22 * a31)
+        val det = det3(cnt, sl, sx, sl, sll, slx, sx, slx, sxx)
+        val detC = det3(sy, sl, sx, sly, sll, slx, sxy, slx, sxx)
+        val detA = det3(cnt, sy, sx, sl, sly, slx, sx, sxy, sxx)
+        val detB = det3(cnt, sl, sy, sl, sll, sly, sx, slx, sxy)
+        // scale-RELATIVE singularity fence: an exactly-collinear design
+        // (constant exog) lands at det ≈ diagonal-product·1e-16 float
+        // dust, not literal zero — treat anything under 1e-10 of the
+        // diagonal product as singular (well-conditioned designs sit
+        // many orders above)
+        val diag = math.abs(cnt * sll * sxx)
+        if (!java.lang.Double.isFinite(det) ||
+            math.abs(det) <= 1e-10 * (diag + 1.0)) Iterator.empty
         else {
-          var cnt = 0.0; var sl = 0.0; var sx = 0.0; var sy = 0.0
-          var sll = 0.0; var slx = 0.0; var sxx = 0.0; var sly = 0.0
-          var sxy = 0.0
-          var t = 1
-          while (t < n) {
-            val l = y(t - 1); val xv = x(t); val yv = y(t)
-            cnt += 1; sl += l; sx += xv; sy += yv
-            sll += l * l; slx += l * xv; sxx += xv * xv
-            sly += l * yv; sxy += xv * yv
-            t += 1
-          }
-          // det3 cofactor expansion — ONE written order, mirrored
-          // term-for-term in the q336 oracle
-          def det3(a11: Double, a12: Double, a13: Double,
-                   a21: Double, a22: Double, a23: Double,
-                   a31: Double, a32: Double, a33: Double): Double =
-            a11 * (a22 * a33 - a23 * a32) - a12 * (a21 * a33 - a23 * a31) +
-              a13 * (a21 * a32 - a22 * a31)
-          val det = det3(cnt, sl, sx, sl, sll, slx, sx, slx, sxx)
-          val detC = det3(sy, sl, sx, sly, sll, slx, sxy, slx, sxx)
-          val detA = det3(cnt, sy, sx, sl, sly, slx, sx, sxy, sxx)
-          val detB = det3(cnt, sl, sy, sl, sll, sly, sx, slx, sxy)
-          // scale-RELATIVE singularity fence: an exactly-collinear design
-          // (constant exog) lands at det ≈ diagonal-product·1e-16 float
-          // dust, not literal zero — treat anything under 1e-10 of the
-          // diagonal product as singular (well-conditioned designs sit
-          // many orders above)
-          val diag = math.abs(cnt * sll * sxx)
-          if (!java.lang.Double.isFinite(det) ||
-              math.abs(det) <= 1e-10 * (diag + 1.0)) Iterator.empty
+          val c0 = detC / det; val a1 = detA / det; val b1 = detB / det
+          if (!java.lang.Double.isFinite(c0 + a1 + b1)) Iterator.empty
           else {
-            val c0 = detC / det; val a1 = detA / det; val b1 = detB / det
-            if (!java.lang.Double.isFinite(c0 + a1 + b1)) Iterator.empty
-            else {
-              val xl = x(n - 1)
-              var f = y(n - 1)
-              (1 to horizon).iterator.map { h =>
-                f = c0 + a1 * f + b1 * xl
-                Row(key, n, c0, a1, b1, h, f)
-              }
+            val xl = x(n - 1)
+            var f = y(n - 1)
+            (1 to horizon).iterator.map { h =>
+              f = c0 + a1 * f + b1 * xl
+              Row(key, n, c0, a1, b1, h, f)
             }
           }
         }
-      }(Encoders.row(sarxSchema))
-      .toDF()
+      }
+    }
   }
 
   private val holtSchema = StructType(Seq(
@@ -261,11 +257,8 @@ object Diagnostics {
     * every double bit-for-bit, and the forecasts hash-match an oracle
     * even though the state is floating point end to end.
     *
-    * Scale shape: [[arForecast]]'s — each key's series sorts and smooths
-    * INSIDE its executor via `groupByKey.flatMapGroups`; a million
-    * series is a million independent O(n) kernels, no driver round-trip.
-    * Output: one row per (key, step 1..horizon) plus the fitted
-    * `level`/`trend` on every row; series shorter than 2 observations
+    * Scale shape: [[perSeries]], O(n) per series. Output: one row per
+    * (key, step 1..horizon) plus the fitted `level`/`trend` on every row; series shorter than 2 observations
     * yield no rows (no trend to initialize). */
   def holtForecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
                    valueCol: String, alpha: Double, beta: Double,
@@ -273,26 +266,22 @@ object Diagnostics {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(beta >= 0 && beta <= 1, s"beta must be in [0, 1], got $beta")
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < 2) Iterator.empty
-        else {
-          var l = y(0)
-          var b = y(1) - y(0)
-          var t = 1
-          while (t < n) {
-            val lp = l
-            l = alpha * y(t) + (1 - alpha) * (lp + b)
-            b = beta * (l - lp) + (1 - beta) * b
-            t += 1
-          }
-          (1 to horizon).iterator.map(h => Row(key, n, l, b, h, l + h * b))
+    perSeries(df, keyCols, orderCol, valueCol, None, holtSchema) { (key, y, _) =>
+      val n = y.length
+      if (n < 2) Iterator.empty
+      else {
+        var l = y(0)
+        var b = y(1) - y(0)
+        var t = 1
+        while (t < n) {
+          val lp = l
+          l = alpha * y(t) + (1 - alpha) * (lp + b)
+          b = beta * (l - lp) + (1 - beta) * b
+          t += 1
         }
-      }(Encoders.row(holtSchema))
-      .toDF()
+        (1 to horizon).iterator.map(h => Row(key, n, l, b, h, l + h * b))
+      }
+    }
   }
 
   private val thetaSchema = StructType(Seq(
@@ -320,8 +309,7 @@ object Diagnostics {
     * sequence a recursive SQL CTE replays bit-for-bit. Forecasts are
     * rounded by the caller as the usual hash-stability belt.
     *
-    * Scale shape: [[holtForecast]]'s — per-key kernels via
-    * `groupByKey.flatMapGroups`. Series shorter than 3 (or with a
+    * Scale shape: [[perSeries]]. Series shorter than 3 (or with a
     * degenerate time axis) yield no rows. Output: one row per
     * (key, step 1..horizon) with the fitted `slope` and SES `level`. */
   def thetaForecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
@@ -329,42 +317,38 @@ object Diagnostics {
                     horizon: Int): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < 3) Iterator.empty
-        else {
-          // exact integer sufficient sums over t = 1..n (q142's recipe);
-          // the integer-quantized contract makes y(t).toLong exact
-          val nL = n.toLong
-          val st = nL * (nL + 1) / 2
-          val stt = nL * (nL + 1) * (2 * nL + 1) / 6
-          var sy = 0L; var sty = 0L
-          var i = 0
-          while (i < n) {
-            val v = y(i).toLong
-            sy += v; sty += (i + 1) * v
-            i += 1
-          }
-          val den = nL * stt - st * st
-          if (den == 0L) Iterator.empty
-          else {
-            val b = (nL * sty - st * sy).toDouble / den.toDouble
-            val a = (sy.toDouble - b * st.toDouble) / nL
-            var l = 2.0 * y(0) - (a + b * 1)
-            var t = 1
-            while (t < n) {
-              l = alpha * (2.0 * y(t) - (a + b * (t + 1))) + (1 - alpha) * l
-              t += 1
-            }
-            (1 to horizon).iterator.map(h =>
-              Row(key, n, b, l, h, 0.5 * (a + b * (n + h)) + 0.5 * l))
-          }
+    perSeries(df, keyCols, orderCol, valueCol, None, thetaSchema) { (key, y, _) =>
+      val n = y.length
+      if (n < 3) Iterator.empty
+      else {
+        // exact integer sufficient sums over t = 1..n (q142's recipe);
+        // the integer-quantized contract makes y(t).toLong exact
+        val nL = n.toLong
+        val st = nL * (nL + 1) / 2
+        val stt = nL * (nL + 1) * (2 * nL + 1) / 6
+        var sy = 0L; var sty = 0L
+        var i = 0
+        while (i < n) {
+          val v = y(i).toLong
+          sy += v; sty += (i + 1) * v
+          i += 1
         }
-      }(Encoders.row(thetaSchema))
-      .toDF()
+        val den = nL * stt - st * st
+        if (den == 0L) Iterator.empty
+        else {
+          val b = (nL * sty - st * sy).toDouble / den.toDouble
+          val a = (sy.toDouble - b * st.toDouble) / nL
+          var l = 2.0 * y(0) - (a + b * 1)
+          var t = 1
+          while (t < n) {
+            l = alpha * (2.0 * y(t) - (a + b * (t + 1))) + (1 - alpha) * l
+            t += 1
+          }
+          (1 to horizon).iterator.map(h =>
+            Row(key, n, b, l, h, 0.5 * (a + b * (n + h)) + 0.5 * l))
+        }
+      }
+    }
   }
 
   private val hwSchema = StructType(Seq(
@@ -392,10 +376,8 @@ object Diagnostics {
     * the m seasonals as an ordered LIST column) replays bit-for-bit;
     * forecasts are e4-quantized only as a hash-stability belt.
     *
-    * Scale shape: [[holtForecast]]'s — each key's series smooths inside
-    * its executor; a million keys = a million independent O(n) kernels.
-    * Output: one row per (key, step 1..horizon) with the final
-    * `level`/`trend`. */
+    * Scale shape: [[perSeries]], O(n) per series. Output: one row per
+    * (key, step 1..horizon) with the final `level`/`trend`. */
   def holtWintersForecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
                           valueCol: String, period: Int, alpha: Double,
                           beta: Double, gamma: Double, horizon: Int,
@@ -406,37 +388,33 @@ object Diagnostics {
     require(gamma >= 0 && gamma <= 1, s"gamma must be in [0, 1], got $gamma")
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
     val q = math.pow(10, roundTo)
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        val m = period
-        if (n < 2 * m) Iterator.empty
-        else {
-          var s1 = 0.0; var s2 = 0.0
-          var i = 0
-          while (i < m) { s1 += y(i); i += 1 }
-          while (i < 2 * m) { s2 += y(i); i += 1 }
-          var l = s1 / m
-          var b = (s2 / m - s1 / m) / m
-          val s = Array.tabulate(m)(j => y(j) - s1 / m)
-          var t = m
-          while (t < n) {
-            val sOld = s(t % m)
-            val lNew = alpha * (y(t) - sOld) + (1 - alpha) * (l + b)
-            b = beta * (lNew - l) + (1 - beta) * b
-            s(t % m) = gamma * (y(t) - lNew) + (1 - gamma) * sOld
-            l = lNew
-            t += 1
-          }
-          (1 to horizon).iterator.map { h =>
-            val f = l + h * b + s((n + h - 1) % m)
-            Row(key, n, l, b, h, math.floor(f * q + 0.5) / q)
-          }
+    perSeries(df, keyCols, orderCol, valueCol, None, hwSchema) { (key, y, _) =>
+      val n = y.length
+      val m = period
+      if (n < 2 * m) Iterator.empty
+      else {
+        var s1 = 0.0; var s2 = 0.0
+        var i = 0
+        while (i < m) { s1 += y(i); i += 1 }
+        while (i < 2 * m) { s2 += y(i); i += 1 }
+        var l = s1 / m
+        var b = (s2 / m - s1 / m) / m
+        val s = Array.tabulate(m)(j => y(j) - s1 / m)
+        var t = m
+        while (t < n) {
+          val sOld = s(t % m)
+          val lNew = alpha * (y(t) - sOld) + (1 - alpha) * (l + b)
+          b = beta * (lNew - l) + (1 - beta) * b
+          s(t % m) = gamma * (y(t) - lNew) + (1 - gamma) * sOld
+          l = lNew
+          t += 1
         }
-      }(Encoders.row(hwSchema))
-      .toDF()
+        (1 to horizon).iterator.map { h =>
+          val f = l + h * b + s((n + h - 1) % m)
+          Row(key, n, l, b, h, math.floor(f * q + 0.5) / q)
+        }
+      }
+    }
   }
 
   /** Fixed-lag-1 Augmented Dickey-Fuller unit-root t-statistic per key —
@@ -1129,43 +1107,37 @@ object Diagnostics {
     * the ROUNDED p. Values must be caller-quantized (doubles exact to
     * 2⁵³); n³ needs n ≤ 2·10⁶ — any per-key series clears it.
     *
-    * Scale shape: [[mannKendall]]'s — the O(n²) sign walk runs per key
-    * inside its executor, a million keys = a million independent
-    * kernels. Output: `(key, n_obs, k_stat, t_change, p_e9,
-    * significant)`; keys with n < 3 emit nothing. */
+    * Scale shape: [[perSeries]], an O(n²) sign walk per series.
+    * Output: `(key, n_obs, k_stat, t_change, p_e9, significant)`; keys with n < 3 emit nothing. */
   def pettitt(df: DataFrame, keyCols: Seq[String], orderCol: String,
               valueCol: String): DataFrame = {
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val x = Diagnostics.series(it)
-        val n = x.length
-        if (n < 3) Iterator.empty
-        else {
-          var best = 0L
-          var bestT = 1
-          var u = 0L
-          var t = 0
-          while (t < n - 1) {
-            var v = 0L
-            var j = 0
-            while (j < n) {
-              v += java.lang.Double.compare(x(t), x(j)).sign
-              j += 1
-            }
-            u += v
-            if (math.abs(u) > best) { best = math.abs(u); bestT = t + 1 }
-            t += 1
+    perSeries(df, keyCols, orderCol, valueCol, None, ptSchema) { (key, x, _) =>
+      val n = x.length
+      if (n < 3) Iterator.empty
+      else {
+        var best = 0L
+        var bestT = 1
+        var u = 0L
+        var t = 0
+        while (t < n - 1) {
+          var v = 0L
+          var j = 0
+          while (j < n) {
+            v += java.lang.Double.compare(x(t), x(j)).sign
+            j += 1
           }
-          val nL = n.toLong
-          val p = math.min(1.0, 2.0 * math.exp(
-            -6.0 * (best.toDouble * best.toDouble) /
-              (nL * nL * nL + nL * nL).toDouble))
-          val pE9 = math.floor(p * 1e9 + 0.5).toLong
-          Iterator.single(Row(key, n, best, bestT, pE9, pE9 < 50000000L))
+          u += v
+          if (math.abs(u) > best) { best = math.abs(u); bestT = t + 1 }
+          t += 1
         }
-      }(Encoders.row(ptSchema))
-      .toDF()
+        val nL = n.toLong
+        val p = math.min(1.0, 2.0 * math.exp(
+          -6.0 * (best.toDouble * best.toDouble) /
+            (nL * nL * nL + nL * nL).toDouble))
+        val pE9 = math.floor(p * 1e9 + 0.5).toLong
+        Iterator.single(Row(key, n, best, bestT, pE9, pE9 < 50000000L))
+      }
+    }
   }
 
   private val ktSchema = StructType(Seq(
@@ -1197,65 +1169,60 @@ object Diagnostics {
     * Values must be integer-quantized upstream (doubles stay exact to
     * 2⁵³). Constant x or y (a zero τ denominator) emits null τ/z.
     *
-    * Scale shape: [[mannKendall]]'s — the O(n²) pair walk runs per key
-    * inside its executor (monthly grids are ~10²; a merge-sort
-    * inversion count drops it to O(n log n) if ever needed), a million
-    * keys = a million independent kernels. Output: `(key, n_obs,
+    * Scale shape: [[perSeries]], an O(n²) pair walk per series (monthly
+    * grids are ~10²; a merge-sort inversion count drops it to
+    * O(n log n) if ever needed). Output: `(key, n_obs,
     * s_stat, tau_b_e6, z_e4, significant)`; keys with n < 3 emit
     * nothing. */
   def kendallTau(df: DataFrame, keyCols: Seq[String], xCol: String,
                  yCol: String): DataFrame = {
-    slim(df, keyCols, xCol, yCol, exogCol = Some(xCol))
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val (y, x) = Diagnostics.seriesX(it)
-        val n = y.length
-        if (n < 3) Iterator.empty
-        else {
-          var s = 0L
-          var i = 0
-          while (i < n) {
-            var j = i + 1
-            while (j < n) {
-              val sx = java.lang.Double.compare(x(j), x(i)).sign
-              val sy = java.lang.Double.compare(y(j), y(i)).sign
-              s += (sx * sy).toLong
-              j += 1
-            }
-            i += 1
+    perSeries(df, keyCols, xCol, yCol, Some(xCol), ktSchema) { (key, y, x) =>
+      val n = y.length
+      if (n < 3) Iterator.empty
+      else {
+        var s = 0L
+        var i = 0
+        while (i < n) {
+          var j = i + 1
+          while (j < n) {
+            val sx = java.lang.Double.compare(x(j), x(i)).sign
+            val sy = java.lang.Double.compare(y(j), y(i)).sign
+            s += (sx * sy).toLong
+            j += 1
           }
-          def tieSums(v: Array[Double]): (Long, Long, Long) =
-            v.groupBy(identity).valuesIterator
-              .map(_.length.toLong).filter(_ > 1)
-              .foldLeft((0L, 0L, 0L)) { case ((a2, a25, a3), t) =>
-                (a2 + t * (t - 1), a25 + t * (t - 1) * (2 * t + 5),
-                  a3 + t * (t - 1) * (t - 2))
-              }
-          val (x2, x25, x3) = tieSums(x)
-          val (y2, y25, y3) = tieSums(y)
-          val nL = n.toLong
-          val n0 = nL * (nL - 1) / 2
-          val dx = n0 - x2 / 2
-          val dy = n0 - y2 / 2
-          if (dx <= 0 || dy <= 0)
-            Iterator.single(Row(key, n, s, null, null, null))
-          else {
-            val tau = s.toDouble / math.sqrt(dx.toDouble * dy.toDouble)
-            val v0 = nL * (nL - 1) * (2 * nL + 5)
-            val varS = (v0 - x25 - y25).toDouble / 18.0 +
-              x3.toDouble * y3.toDouble /
-                (9.0 * nL * (nL - 1) * (nL - 2)) +
-              x2.toDouble * y2.toDouble / (2.0 * nL * (nL - 1))
-            val tauE6 = math.floor(tau * 1e6 + 0.5).toLong
-            if (varS <= 0) Iterator.single(Row(key, n, s, tauE6, null, null))
-            else {
-              val zE4 = math.floor(s.toDouble / math.sqrt(varS) * 1e4 + 0.5).toLong
-              Iterator.single(Row(key, n, s, tauE6, zE4, math.abs(zE4) > 19600L))
+          i += 1
+        }
+        def tieSums(v: Array[Double]): (Long, Long, Long) =
+          v.groupBy(identity).valuesIterator
+            .map(_.length.toLong).filter(_ > 1)
+            .foldLeft((0L, 0L, 0L)) { case ((a2, a25, a3), t) =>
+              (a2 + t * (t - 1), a25 + t * (t - 1) * (2 * t + 5),
+                a3 + t * (t - 1) * (t - 2))
             }
+        val (x2, x25, x3) = tieSums(x)
+        val (y2, y25, y3) = tieSums(y)
+        val nL = n.toLong
+        val n0 = nL * (nL - 1) / 2
+        val dx = n0 - x2 / 2
+        val dy = n0 - y2 / 2
+        if (dx <= 0 || dy <= 0)
+          Iterator.single(Row(key, n, s, null, null, null))
+        else {
+          val tau = s.toDouble / math.sqrt(dx.toDouble * dy.toDouble)
+          val v0 = nL * (nL - 1) * (2 * nL + 5)
+          val varS = (v0 - x25 - y25).toDouble / 18.0 +
+            x3.toDouble * y3.toDouble /
+              (9.0 * nL * (nL - 1) * (nL - 2)) +
+            x2.toDouble * y2.toDouble / (2.0 * nL * (nL - 1))
+          val tauE6 = math.floor(tau * 1e6 + 0.5).toLong
+          if (varS <= 0) Iterator.single(Row(key, n, s, tauE6, null, null))
+          else {
+            val zE4 = math.floor(s.toDouble / math.sqrt(varS) * 1e4 + 0.5).toLong
+            Iterator.single(Row(key, n, s, tauE6, zE4, math.abs(zE4) > 19600L))
           }
         }
-      }(Encoders.row(ktSchema))
-      .toDF()
+      }
+    }
   }
 
   private val oaSchema = StructType(Seq(
@@ -1281,43 +1248,38 @@ object Diagnostics {
     * e6-quantized. Degenerate keys (C + D = 0 — every pair tied on x
     * or y) emit null γ; a zero denominator nulls its D.
     *
-    * Scale shape: [[kendallTau]]'s — O(n²) per key inside its
-    * executor. Output: `(key, n_obs, c_pairs, d_pairs, gamma_e6,
-    * somers_d_yx_e6, somers_d_xy_e6)`; keys with n < 3 emit
-    * nothing. */
+    * Scale shape: [[perSeries]], O(n²) per series. Output: `(key,
+    * n_obs, c_pairs, d_pairs, gamma_e6, somers_d_yx_e6,
+    * somers_d_xy_e6)`; keys with n < 3 emit nothing. */
   def ordinalAssociation(df: DataFrame, keyCols: Seq[String], xCol: String,
                          yCol: String): DataFrame = {
-    slim(df, keyCols, xCol, yCol, exogCol = Some(xCol))
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val (y, x) = Diagnostics.seriesX(it)
-        val n = y.length
-        if (n < 3) Iterator.empty
-        else {
-          var c = 0L; var d = 0L; var tx = 0L; var ty = 0L
-          var i = 0
-          while (i < n) {
-            var j = i + 1
-            while (j < n) {
-              val sx = java.lang.Double.compare(x(j), x(i)).sign
-              val sy = java.lang.Double.compare(y(j), y(i)).sign
-              if (sx != 0 && sy != 0) { if (sx == sy) c += 1 else d += 1 }
-              else if (sx == 0 && sy != 0) tx += 1
-              else if (sx != 0 && sy == 0) ty += 1
-              j += 1
-            }
-            i += 1
+    perSeries(df, keyCols, xCol, yCol, Some(xCol), oaSchema) { (key, y, x) =>
+      val n = y.length
+      if (n < 3) Iterator.empty
+      else {
+        var c = 0L; var d = 0L; var tx = 0L; var ty = 0L
+        var i = 0
+        while (i < n) {
+          var j = i + 1
+          while (j < n) {
+            val sx = java.lang.Double.compare(x(j), x(i)).sign
+            val sy = java.lang.Double.compare(y(j), y(i)).sign
+            if (sx != 0 && sy != 0) { if (sx == sy) c += 1 else d += 1 }
+            else if (sx == 0 && sy != 0) tx += 1
+            else if (sx != 0 && sy == 0) ty += 1
+            j += 1
           }
-          def e6(num: Long, den: Long): Any =
-            if (den <= 0) null
-            else math.floor(num.toDouble / den.toDouble * 1e6 + 0.5).toLong
-          Iterator.single(Row(key, n, c, d,
-            e6(c - d, c + d),
-            e6(c - d, c + d + ty),
-            e6(c - d, c + d + tx)))
+          i += 1
         }
-      }(Encoders.row(oaSchema))
-      .toDF()
+        def e6(num: Long, den: Long): Any =
+          if (den <= 0) null
+          else math.floor(num.toDouble / den.toDouble * 1e6 + 0.5).toLong
+        Iterator.single(Row(key, n, c, d,
+          e6(c - d, c + d),
+          e6(c - d, c + d + ty),
+          e6(c - d, c + d + tx)))
+      }
+    }
   }
 
   /** Exact two-sided sign test per key — "did this series go up more
@@ -1393,46 +1355,41 @@ object Diagnostics {
     * series are ~10²; an inversion-count (BIT) drops it to O(n log n) if
     * per-series lengths ever warrant it.
     *
-    * Scale shape: [[seasonalArForecast]]'s — per-key series inside its
-    * executor, a million keys = a million independent kernels. */
+    * Scale shape: [[perSeries]]. */
   def mannKendall(df: DataFrame, keyCols: Seq[String], orderCol: String,
                   valueCol: String, roundTo: Int = 4): DataFrame = {
     val q = math.pow(10, roundTo)
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < 3) Iterator.empty
-        else {
-          var s = 0L
-          var i = 0
-          while (i < n) {
-            var j = i + 1
-            while (j < n) {
-              if (y(j) > y(i)) s += 1 else if (y(j) < y(i)) s -= 1
-              j += 1
-            }
-            i += 1
+    perSeries(df, keyCols, orderCol, valueCol, None, mkSchema) { (key, y, _) =>
+      val n = y.length
+      if (n < 3) Iterator.empty
+      else {
+        var s = 0L
+        var i = 0
+        while (i < n) {
+          var j = i + 1
+          while (j < n) {
+            if (y(j) > y(i)) s += 1 else if (y(j) < y(i)) s -= 1
+            j += 1
           }
-          val tieSum = y.groupBy(identity).valuesIterator
-            .map(_.length.toLong).filter(_ > 1)
-            .map(t => t * (t - 1) * (2 * t + 5)).sum
-          val nL = n.toLong
-          val var18 = nL * (nL - 1) * (2 * nL + 5) - tieSum
-          val zRaw =
-            if (s > 0) (s.toDouble - 1.0) / math.sqrt(var18 / 18.0)
-            else if (s < 0) (s.toDouble + 1.0) / math.sqrt(var18 / 18.0)
-            else 0.0
-          val z = math.floor(zRaw * q + 0.5) / q
-          val trend =
-            if (z > 1.96) "increasing"
-            else if (z < -1.96) "decreasing"
-            else "no_trend"
-          Iterator.single(Row(key, n, s, var18, z, trend))
+          i += 1
         }
-      }(Encoders.row(mkSchema))
-      .toDF()
+        val tieSum = y.groupBy(identity).valuesIterator
+          .map(_.length.toLong).filter(_ > 1)
+          .map(t => t * (t - 1) * (2 * t + 5)).sum
+        val nL = n.toLong
+        val var18 = nL * (nL - 1) * (2 * nL + 5) - tieSum
+        val zRaw =
+          if (s > 0) (s.toDouble - 1.0) / math.sqrt(var18 / 18.0)
+          else if (s < 0) (s.toDouble + 1.0) / math.sqrt(var18 / 18.0)
+          else 0.0
+        val z = math.floor(zRaw * q + 0.5) / q
+        val trend =
+          if (z > 1.96) "increasing"
+          else if (z < -1.96) "decreasing"
+          else "no_trend"
+        Iterator.single(Row(key, n, s, var18, z, trend))
+      }
+    }
   }
 
   /** Seasonal Mann–Kendall (Hirsch & Slack 1984) — [[mannKendall]]
@@ -1454,48 +1411,44 @@ object Diagnostics {
                           period: Int = 12, roundTo: Int = 4): DataFrame = {
     require(period >= 2, s"period must be >= 2, got $period")
     val q = math.pow(10, roundTo)
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < period + 2) Iterator.empty
-        else {
-          var s = 0L
-          var var18 = 0L
-          var p = 0
-          while (p < period) {
-            val idx = p.until(n, period)
-            var i = 0
-            while (i < idx.length) {
-              var j = i + 1
-              while (j < idx.length) {
-                if (y(idx(j)) > y(idx(i))) s += 1
-                else if (y(idx(j)) < y(idx(i))) s -= 1
-                j += 1
-              }
-              i += 1
+    perSeries(df, keyCols, orderCol, valueCol, None, mkSchema) { (key, y, _) =>
+      val n = y.length
+      if (n < period + 2) Iterator.empty
+      else {
+        var s = 0L
+        var var18 = 0L
+        var p = 0
+        while (p < period) {
+          val idx = p.until(n, period)
+          var i = 0
+          while (i < idx.length) {
+            var j = i + 1
+            while (j < idx.length) {
+              if (y(idx(j)) > y(idx(i))) s += 1
+              else if (y(idx(j)) < y(idx(i))) s -= 1
+              j += 1
             }
-            val np = idx.length.toLong
-            val tieSum = idx.map(y).groupBy(identity).valuesIterator
-              .map(_.length.toLong).filter(_ > 1)
-              .map(t => t * (t - 1) * (2 * t + 5)).sum
-            var18 += np * (np - 1) * (2 * np + 5) - tieSum
-            p += 1
+            i += 1
           }
-          val zRaw =
-            if (s > 0) (s.toDouble - 1.0) / math.sqrt(var18 / 18.0)
-            else if (s < 0) (s.toDouble + 1.0) / math.sqrt(var18 / 18.0)
-            else 0.0
-          val z = math.floor(zRaw * q + 0.5) / q
-          val trend =
-            if (z > 1.96) "increasing"
-            else if (z < -1.96) "decreasing"
-            else "no_trend"
-          Iterator.single(Row(key, n, s, var18, z, trend))
+          val np = idx.length.toLong
+          val tieSum = idx.map(y).groupBy(identity).valuesIterator
+            .map(_.length.toLong).filter(_ > 1)
+            .map(t => t * (t - 1) * (2 * t + 5)).sum
+          var18 += np * (np - 1) * (2 * np + 5) - tieSum
+          p += 1
         }
-      }(Encoders.row(mkSchema))
-      .toDF()
+        val zRaw =
+          if (s > 0) (s.toDouble - 1.0) / math.sqrt(var18 / 18.0)
+          else if (s < 0) (s.toDouble + 1.0) / math.sqrt(var18 / 18.0)
+          else 0.0
+        val z = math.floor(zRaw * q + 0.5) / q
+        val trend =
+          if (z > 1.96) "increasing"
+          else if (z < -1.96) "decreasing"
+          else "no_trend"
+        Iterator.single(Row(key, n, s, var18, z, trend))
+      }
+    }
   }
 
   private val tsSchema = StructType(Seq(
@@ -1520,37 +1473,31 @@ object Diagnostics {
     * division diverges cross-engine on negative slopes). A pairwise
     * self-join replays it exactly in SQL.
     *
-    * Scale shape: [[mannKendall]]'s — the O(n²) pair walk runs per key
-    * INSIDE its executor over series assembled by one shuffle; monthly
-    * series are ~10² points, so a million keys is a million 5k-pair
-    * kernels. BIGINT bound: |dy|·10⁶ < 2⁶³. */
+    * Scale shape: [[perSeries]], an O(n²) pair walk per series (monthly
+    * series are ~10² points, ~5k pairs). BIGINT bound: |dy|·10⁶ < 2⁶³. */
   def theilSen(df: DataFrame, keyCols: Seq[String], orderCol: String,
                valueCol: String): DataFrame = {
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < 2) Iterator.empty
-        else {
-          val slopes = new Array[Long](n * (n - 1) / 2)
-          var m = 0
-          var i = 0
-          while (i < n) {
-            var j = i + 1
-            while (j < n) {
-              val dy = (y(j) - y(i)).toLong
-              slopes(m) = math.floor(dy.toDouble * 1e6 / (j - i) + 0.5).toLong
-              m += 1
-              j += 1
-            }
-            i += 1
+    perSeries(df, keyCols, orderCol, valueCol, None, tsSchema) { (key, y, _) =>
+      val n = y.length
+      if (n < 2) Iterator.empty
+      else {
+        val slopes = new Array[Long](n * (n - 1) / 2)
+        var m = 0
+        var i = 0
+        while (i < n) {
+          var j = i + 1
+          while (j < n) {
+            val dy = (y(j) - y(i)).toLong
+            slopes(m) = math.floor(dy.toDouble * 1e6 / (j - i) + 0.5).toLong
+            m += 1
+            j += 1
           }
-          java.util.Arrays.sort(slopes)
-          Iterator.single(Row(key, n, m.toLong, slopes((m - 1) / 2)))
+          i += 1
         }
-      }(Encoders.row(tsSchema))
-      .toDF()
+        java.util.Arrays.sort(slopes)
+        Iterator.single(Row(key, n, m.toLong, slopes((m - 1) / 2)))
+      }
+    }
   }
 
   /** Rolling-origin AR(1) backtest per key — the honest forecast-accuracy
@@ -1649,39 +1596,34 @@ object Diagnostics {
     * order exists. The verdict compares the quantized Q against the
     * quantized critical literal.
     *
-    * Scale shape: [[mannKendall]]'s — per-key series inside its
-    * executor. Output: `(key, n_obs, h_lags, q_e4, crit5_e4,
-    * autocorrelated)`. */
+    * Scale shape: [[perSeries]]. Output: `(key, n_obs, h_lags, q_e4,
+    * crit5_e4, autocorrelated)`. */
   def ljungBox(df: DataFrame, keyCols: Seq[String], orderCol: String,
                valueCol: String, nlags: Int = 12,
                crit5E4: Long = 210261L): DataFrame = {
     require(nlags >= 1, s"nlags must be >= 1, got $nlags")
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n <= nlags + 1) Iterator.empty
-        else {
-          val rho = TimeSeriesStats.acf(y, nlags).map(r =>
-            BigDecimal(r).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-          var sumE9 = 0L
-          var k = 1
-          while (k <= nlags) {
-            val r = rho(k - 1)
-            sumE9 += math.floor(r * r / (n - k) * 1e9 + 0.5).toLong
-            k += 1
-          }
-          // BigInt product: n·(n+2)·sumE9 can pass 2⁶³ for long series
-          // (sumE9 approaches nlags·1e9/2 near the n≈nlags floor), and a
-          // silent Long wrap would corrupt q_e4 AND the verdict. DuckDB
-          // promotes the same product to HUGEINT, so BigInt here is
-          // bit-identical to the oracle in every regime.
-          val qE4 = (BigInt(n) * (n + 2) * sumE9 / 100000L).toLong
-          Iterator.single(Row(key, n, nlags, qE4, crit5E4, qE4 > crit5E4))
+    perSeries(df, keyCols, orderCol, valueCol, None, lbSchema) { (key, y, _) =>
+      val n = y.length
+      if (n <= nlags + 1) Iterator.empty
+      else {
+        val rho = TimeSeriesStats.acf(y, nlags).map(r =>
+          BigDecimal(r).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        var sumE9 = 0L
+        var k = 1
+        while (k <= nlags) {
+          val r = rho(k - 1)
+          sumE9 += math.floor(r * r / (n - k) * 1e9 + 0.5).toLong
+          k += 1
         }
-      }(Encoders.row(lbSchema))
-      .toDF()
+        // BigInt product: n·(n+2)·sumE9 can pass 2⁶³ for long series
+        // (sumE9 approaches nlags·1e9/2 near the n≈nlags floor), and a
+        // silent Long wrap would corrupt q_e4 AND the verdict. DuckDB
+        // promotes the same product to HUGEINT, so BigInt here is
+        // bit-identical to the oracle in every regime.
+        val qE4 = (BigInt(n) * (n + 2) * sumE9 / 100000L).toLong
+        Iterator.single(Row(key, n, nlags, qE4, crit5E4, qE4 > crit5E4))
+      }
+    }
   }
 
   /** Gumbel block-maxima fit + return level per key (the
@@ -1754,55 +1696,51 @@ object Diagnostics {
     * a recursive CTE carrying (φ, θ, a, b) replays the whole fit —
     * the grid is what buys SQL-checkability over Gauss-Newton.
     *
-    * Scale shape: per-key kernel, 361·O(n) per series, state O(1). */
+    * Scale shape: [[perSeries]], 361·O(n) per series, state O(1). */
   def arma11Forecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
                      valueCol: String, horizon: Int): DataFrame = {
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < 4) Iterator.empty
-        else {
-          var bestSse = Double.MaxValue
-          var bestPhi = 0.0; var bestTh = 0.0
-          var bestC = 0.0; var bestE = 0.0
-          var k1 = -9
-          while (k1 <= 9) {
-            val phi = k1 / 10.0
-            var k2 = -9
-            while (k2 <= 9) {
-              val th = k2 / 10.0
-              var aPrev = 0.0; var bPrev = 0.0
-              var saa = 0.0; var sab = 0.0; var sbb = 0.0
-              var t = 1
-              while (t < n) {
-                val a = y(t) - phi * y(t - 1) - th * aPrev
-                val b = 1.0 - th * bPrev
-                saa += a * a; sab += a * b; sbb += b * b
-                aPrev = a; bPrev = b
-                t += 1
-              }
-              val sse = saa - sab * sab / sbb
-              if (sse < bestSse) {
-                bestSse = sse; bestPhi = phi; bestTh = th
-                val c = sab / sbb
-                bestC = c; bestE = aPrev - c * bPrev
-              }
-              k2 += 1
+    perSeries(df, keyCols, orderCol, valueCol, None, arma11Schema) { (key, y, _) =>
+      val n = y.length
+      if (n < 4) Iterator.empty
+      else {
+        var bestSse = Double.MaxValue
+        var bestPhi = 0.0; var bestTh = 0.0
+        var bestC = 0.0; var bestE = 0.0
+        var k1 = -9
+        while (k1 <= 9) {
+          val phi = k1 / 10.0
+          var k2 = -9
+          while (k2 <= 9) {
+            val th = k2 / 10.0
+            var aPrev = 0.0; var bPrev = 0.0
+            var saa = 0.0; var sab = 0.0; var sbb = 0.0
+            var t = 1
+            while (t < n) {
+              val a = y(t) - phi * y(t - 1) - th * aPrev
+              val b = 1.0 - th * bPrev
+              saa += a * a; sab += a * b; sbb += b * b
+              aPrev = a; bPrev = b
+              t += 1
             }
-            k1 += 1
+            val sse = saa - sab * sab / sbb
+            if (sse < bestSse) {
+              bestSse = sse; bestPhi = phi; bestTh = th
+              val c = sab / sbb
+              bestC = c; bestE = aPrev - c * bPrev
+            }
+            k2 += 1
           }
-          val f1 = bestC + bestPhi * y(n - 1) + bestTh * bestE
-          val fs = Iterator.iterate(f1)(p => bestC + bestPhi * p)
-            .take(horizon).toVector
-          fs.iterator.zipWithIndex.map { case (f, i) =>
-            Row(key, bestPhi, bestTh, bestC, i + 1, f)
-          }
+          k1 += 1
         }
-      }(Encoders.row(arma11Schema))
-      .toDF()
+        val f1 = bestC + bestPhi * y(n - 1) + bestTh * bestE
+        val fs = Iterator.iterate(f1)(p => bestC + bestPhi * p)
+          .take(horizon).toVector
+        fs.iterator.zipWithIndex.map { case (f, i) =>
+          Row(key, bestPhi, bestTh, bestC, i + 1, f)
+        }
+      }
+    }
   }
 
   private val ma1Schema = StructType(Seq(
@@ -1826,38 +1764,33 @@ object Diagnostics {
     * replays, and argmin-over-19-candidates is order-robust where a
     * Gauss-Newton iterate would not be.
     *
-    * Scale shape: [[seasonalArForecast]]'s — per-key series fit inside
-    * its executor, 19·O(n) per series, state O(1). */
+    * Scale shape: [[perSeries]], 19·O(n) per series, state O(1). */
   def ma1Forecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
                   valueCol: String, horizon: Int): DataFrame = {
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < 3) Iterator.empty
-        else {
-          var s = 0.0; var i = 0
-          while (i < n) { s += y(i); i += 1 }
-          val mu = s / n
-          var bestTh = 0.0; var bestSse = Double.MaxValue; var bestE = 0.0
-          var k = -9
-          while (k <= 9) {
-            val th = k / 10.0
-            var e = y(0) - mu
-            var sse = e * e
-            var t = 1
-            while (t < n) { e = y(t) - mu - th * e; sse += e * e; t += 1 }
-            if (sse < bestSse) { bestSse = sse; bestTh = th; bestE = e }
-            k += 1
-          }
-          (1 to horizon).iterator.map { h =>
-            Row(key, bestTh, mu, h, if (h == 1) mu + bestTh * bestE else mu)
-          }
+    perSeries(df, keyCols, orderCol, valueCol, None, ma1Schema) { (key, y, _) =>
+      val n = y.length
+      if (n < 3) Iterator.empty
+      else {
+        var s = 0.0; var i = 0
+        while (i < n) { s += y(i); i += 1 }
+        val mu = s / n
+        var bestTh = 0.0; var bestSse = Double.MaxValue; var bestE = 0.0
+        var k = -9
+        while (k <= 9) {
+          val th = k / 10.0
+          var e = y(0) - mu
+          var sse = e * e
+          var t = 1
+          while (t < n) { e = y(t) - mu - th * e; sse += e * e; t += 1 }
+          if (sse < bestSse) { bestSse = sse; bestTh = th; bestE = e }
+          k += 1
         }
-      }(Encoders.row(ma1Schema))
-      .toDF()
+        (1 to horizon).iterator.map { h =>
+          Row(key, bestTh, mu, h, if (h == 1) mu + bestTh * bestE else mu)
+        }
+      }
+    }
   }
 
   private val llSchema = StructType(Seq(
@@ -1890,54 +1823,48 @@ object Diagnostics {
     * left-associated IEEE recursion a recursive CTE replays per
     * candidate.
     *
-    * Scale shape: [[ma1Forecast]]'s — per-key series filtered inside its
-    * executor, 5·O(n) per series, O(1) state; a million keys is a
-    * million independent kernels. */
+    * Scale shape: [[perSeries]], 5·O(n) per series, O(1) state. */
   def localLevelForecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
                          valueCol: String, horizon: Int): DataFrame = {
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
     val grid = Array(0.1, 0.5, 1.0, 2.0, 10.0)
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < 3) Iterator.empty
-        else {
-          var bestLam = 0.0; var bestNll = Double.MaxValue
-          var bestM = 0.0; var bestP = 0.0; var bestR = 0.0
-          var g = 0
-          while (g < grid.length) {
-            val lam = grid(g)
-            var m = y(0); var p = lam + 1.0
-            var sv = 0.0; var slf = 0.0
-            var t = 1
-            while (t < n) {
-              val v = y(t) - m
-              val f = p + 1.0
-              sv += v * v / f
-              slf += math.log(f)
-              val k = p / f
-              m += k * v
-              p = p * (1.0 - k) + lam
-              t += 1
-            }
-            val cnt = (n - 1).toDouble
-            val rHat = sv / cnt
-            val nll = cnt * math.log(rHat) + slf
-            if (nll < bestNll) {
-              bestNll = nll; bestLam = lam; bestM = m; bestP = p; bestR = rHat
-            }
-            g += 1
+    perSeries(df, keyCols, orderCol, valueCol, None, llSchema) { (key, y, _) =>
+      val n = y.length
+      if (n < 3) Iterator.empty
+      else {
+        var bestLam = 0.0; var bestNll = Double.MaxValue
+        var bestM = 0.0; var bestP = 0.0; var bestR = 0.0
+        var g = 0
+        while (g < grid.length) {
+          val lam = grid(g)
+          var m = y(0); var p = lam + 1.0
+          var sv = 0.0; var slf = 0.0
+          var t = 1
+          while (t < n) {
+            val v = y(t) - m
+            val f = p + 1.0
+            sv += v * v / f
+            slf += math.log(f)
+            val k = p / f
+            m += k * v
+            p = p * (1.0 - k) + lam
+            t += 1
           }
-          (1 to horizon).iterator.map { h =>
-            val sd = math.sqrt(bestR * (bestP + (h - 1).toDouble * bestLam + 1.0))
-            Row(key, n, bestLam, bestR, h,
-              bestM, bestM - 1.96 * sd, bestM + 1.96 * sd)
+          val cnt = (n - 1).toDouble
+          val rHat = sv / cnt
+          val nll = cnt * math.log(rHat) + slf
+          if (nll < bestNll) {
+            bestNll = nll; bestLam = lam; bestM = m; bestP = p; bestR = rHat
           }
+          g += 1
         }
-      }(Encoders.row(llSchema))
-      .toDF()
+        (1 to horizon).iterator.map { h =>
+          val sd = math.sqrt(bestR * (bestP + (h - 1).toDouble * bestLam + 1.0))
+          Row(key, n, bestLam, bestR, h,
+            bestM, bestM - 1.96 * sd, bestM + 1.96 * sd)
+        }
+      }
+    }
   }
 
   private val llrSchema = StructType(Seq(
@@ -1970,56 +1897,52 @@ object Diagnostics {
     val grid = Array(0.1, 0.5, 1.0, 2.0, 10.0)
     def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     def e6(x: Double) = math.floor(x * 1e6 + 0.5).toLong
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < 3) Iterator.empty
-        else {
-          // (nll, m, p, rhat) at λ — the q338 scaled filter verbatim
-          def run(lam: Double): (Double, Double, Double, Double) = {
-            var m = y(0); var p = lam + 1.0
-            var sv = 0.0; var slf = 0.0
-            var t = 1
-            while (t < n) {
-              val v = y(t) - m
-              val f = p + 1.0
-              sv += v * v / f
-              slf += math.log(f)
-              val k = p / f
-              m += k * v
-              p = p * (1.0 - k) + lam
-              t += 1
-            }
-            val cnt = (n - 1).toDouble
-            val rHat = sv / cnt
-            (cnt * math.log(rHat) + slf, m, p, rHat)
+    perSeries(df, keyCols, orderCol, valueCol, None, llrSchema) { (key, y, _) =>
+      val n = y.length
+      if (n < 3) Iterator.empty
+      else {
+        // (nll, m, p, rhat) at λ — the q338 scaled filter verbatim
+        def run(lam: Double): (Double, Double, Double, Double) = {
+          var m = y(0); var p = lam + 1.0
+          var sv = 0.0; var slf = 0.0
+          var t = 1
+          while (t < n) {
+            val v = y(t) - m
+            val f = p + 1.0
+            sv += v * v / f
+            slf += math.log(f)
+            val k = p / f
+            m += k * v
+            p = p * (1.0 - k) + lam
+            t += 1
           }
-          var bi = 0; var bn = Double.MaxValue
-          var g = 0
-          while (g < grid.length) {
-            val nl = run(grid(g))._1
-            if (nl < bn) { bn = nl; bi = g }
-            g += 1
-          }
-          val lam0 = grid(bi)
-          var lo = if (bi == 0) r6(lam0 / 2.0) else grid(bi - 1)
-          var hi = if (bi == grid.length - 1) r6(lam0 * 2.0) else grid(bi + 1)
-          var r = 0
-          while (r < 2) {
-            val p1 = r6(lo + (hi - lo) / 3.0)
-            val p2 = r6(hi - (hi - lo) / 3.0)
-            if (run(p1)._1 < run(p2)._1) hi = p2 else lo = p1
-            r += 1
-          }
-          val lamHat = r6((lo + hi) / 2.0)
-          val (nll, m, _, rHat) = run(lamHat)
-          Iterator.single(Row(key, n, e6(lam0), e6(lamHat), e6(rHat),
-            e6(nll), math.floor(m * 1e4 + 0.5).toLong))
+          val cnt = (n - 1).toDouble
+          val rHat = sv / cnt
+          (cnt * math.log(rHat) + slf, m, p, rHat)
         }
-      }(Encoders.row(llrSchema))
-      .toDF()
+        var bi = 0; var bn = Double.MaxValue
+        var g = 0
+        while (g < grid.length) {
+          val nl = run(grid(g))._1
+          if (nl < bn) { bn = nl; bi = g }
+          g += 1
+        }
+        val lam0 = grid(bi)
+        var lo = if (bi == 0) r6(lam0 / 2.0) else grid(bi - 1)
+        var hi = if (bi == grid.length - 1) r6(lam0 * 2.0) else grid(bi + 1)
+        var r = 0
+        while (r < 2) {
+          val p1 = r6(lo + (hi - lo) / 3.0)
+          val p2 = r6(hi - (hi - lo) / 3.0)
+          if (run(p1)._1 < run(p2)._1) hi = p2 else lo = p1
+          r += 1
+        }
+        val lamHat = r6((lo + hi) / 2.0)
+        val (nll, m, _, rHat) = run(lamHat)
+        Iterator.single(Row(key, n, e6(lam0), e6(lamHat), e6(rHat),
+          e6(nll), math.floor(m * 1e4 + 0.5).toLong))
+      }
+    }
   }
 
   /** Pairwise Dynamic Time Warping distance between every two keys'
@@ -2049,7 +1972,7 @@ object Diagnostics {
     import spark.implicits._
     val ser = slim(df, keyCols, orderCol, valueCol)
       .groupByKey(_._1)(Encoders.STRING)
-      .mapGroups { (k, it) => (k, Diagnostics.series(it)) }
+      .mapGroups { (k, it) => (k, seriesX(it)._1) }
       .toDF("k", "s")
     val pairs = ser.as("a").join(ser.as("b"), col("a.k") < col("b.k"))
       .select(col("a.k").as("ka"), col("b.k").as("kb"),
@@ -2097,48 +2020,42 @@ object Diagnostics {
     * bit-replayable by a SQL oracle (the q117/holtForecast property:
     * fixed IEEE op order, no optimizer).
     *
-    * Scale shape: [[arForecast]]'s — each key's series fits INSIDE its
-    * executor via `groupByKey.flatMapGroups`; a million series is a
-    * million independent O(n) kernels. Series shorter than s+2 pairs or
-    * with a singular design yield no rows.
+    * Scale shape: [[perSeries]], O(n) per series. Series shorter than
+    * s+2 pairs or with a singular design yield no rows.
     * Output: one row per (key, season, step 1..horizon). */
   def seasonalArForecast(df: DataFrame, keyCols: Seq[String], orderCol: String,
                          valueCol: String, season: Int,
                          horizon: Int): DataFrame = {
     require(season >= 1, s"season must be >= 1, got $season")
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    slim(df, keyCols, orderCol, valueCol)
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups { (key, it) =>
-        val y = Diagnostics.series(it)
-        val n = y.length
-        if (n < season + 2) Iterator.empty
-        else {
-          var cnt = 0.0; var sy = 0.0; var sx = 0.0
-          var sxy = 0.0; var sxx = 0.0
-          var t = season
-          while (t < n) {
-            val yt = y(t); val yl = y(t - season)
-            cnt += 1; sy += yt; sx += yl; sxy += yt * yl; sxx += yl * yl
-            t += 1
-          }
-          val den = cnt * sxx - sx * sx
-          if (den == 0.0) Iterator.empty
-          else {
-            val c0 = (sxx * sy - sx * sxy) / den
-            val phi = (cnt * sxy - sx * sy) / den
-            val ext = new Array[Double](n + horizon)
-            System.arraycopy(y, 0, ext, 0, n)
-            val rows = (1 to horizon).map { h =>
-              val f = c0 + phi * ext(n + h - 1 - season)
-              ext(n + h - 1) = f
-              Row(key, season, h, f)
-            }
-            rows.iterator
-          }
+    perSeries(df, keyCols, orderCol, valueCol, None, sarSchema) { (key, y, _) =>
+      val n = y.length
+      if (n < season + 2) Iterator.empty
+      else {
+        var cnt = 0.0; var sy = 0.0; var sx = 0.0
+        var sxy = 0.0; var sxx = 0.0
+        var t = season
+        while (t < n) {
+          val yt = y(t); val yl = y(t - season)
+          cnt += 1; sy += yt; sx += yl; sxy += yt * yl; sxx += yl * yl
+          t += 1
         }
-      }(Encoders.row(sarSchema))
-      .toDF()
+        val den = cnt * sxx - sx * sx
+        if (den == 0.0) Iterator.empty
+        else {
+          val c0 = (sxx * sy - sx * sxy) / den
+          val phi = (cnt * sxy - sx * sy) / den
+          val ext = new Array[Double](n + horizon)
+          System.arraycopy(y, 0, ext, 0, n)
+          val rows = (1 to horizon).map { h =>
+            val f = c0 + phi * ext(n + h - 1 - season)
+            ext(n + h - 1) = f
+            Row(key, season, h, f)
+          }
+          rows.iterator
+        }
+      }
+    }
   }
 
   // ------------------------------------------------------------- U8: SARIMAX

@@ -14,7 +14,7 @@ class PartitionedSinkSpec extends SparkSpec {
     val df = Seq(
       (1L, "a", 10), (2L, "a", 20), (3L, "b", 30), (4L, "c", 40)
     ).toDF("id", "grp", "v")
-    Sinks.writePartitioned(df, dir, Seq("grp"))
+    Sinks.parquetPartitioned(df, dir, Seq("grp"))
 
     val back = spark.read.parquet(dir)
     // lossless (partition column comes back as a column)

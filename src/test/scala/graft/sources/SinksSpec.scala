@@ -59,9 +59,9 @@ class SinksSpec extends SparkSpec {
 
   test("parquetPartitioned: per-key directories readable with pruning") {
     val dir = tmp("pq_sink")
-    Sinks.parquetPartitioned(
-      Seq(("mech", 1.0), ("swe", 2.0), ("mech", 3.0)).toDF("career", "v"),
-      dir, Seq("career"))
+    val df = Seq(("mech", 1.0), ("swe", 2.0), ("mech", 3.0)).toDF("career", "v")
+    intercept[IllegalArgumentException](Sinks.parquetPartitioned(df, dir, Nil))
+    Sinks.parquetPartitioned(df, dir, Seq("career"))
     val sub = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("career=")).sorted
     assert(sub.toSeq === Seq("career=mech", "career=swe"))
     val back = spark.read.parquet(dir).filter(col("career") === "mech")

@@ -7,16 +7,30 @@ import org.apache.spark.sql.functions._
 class StreamingSpec extends SparkSpec {
   import StreamingCollapse._
 
+  private def weeklyBatch(dir: String) = graft.sources.Tables.events(spark, dir)
+    .groupBy(to_date(window(col("ts"), "7 days").getField("start")).as("week"),
+      col("event_type"))
+    .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+    .orderBy("week", "event_type").collect()
+
   test("weeklyEventStats: streaming result equals the batch aggregate") {
     val dir = "/root/testdata/sf0.001"
     val streamed = weeklyEventStats(spark, dir).collect()
-    val batch = graft.sources.Tables.events(spark, dir)
-      .groupBy(to_date(window(col("ts"), "7 days").getField("start")).as("week"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .orderBy("week", "event_type").collect()
+    val batch = weeklyBatch(dir)
     assert(streamed.length === batch.length)
     streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
+  }
+
+  test("a stale active query under a twin's name is stopped before the drain") {
+    val dir = "/root/testdata/sf0.001"
+    // Spark refuses to start a second active query under one name
+    val stale = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+      .writeStream.format("memory").queryName("graft_stream_weekly").start()
+    try {
+      val streamed = weeklyEventStats(spark, dir).collect()
+      assert(!stale.isActive, "the stale query must be stopped")
+      assert(streamed.toSeq === weeklyBatch(dir).toSeq)
+    } finally stale.stop()
   }
 
   test("slidingEventStats: overlapping-window streaming equals the batch explosion") {
@@ -280,6 +294,22 @@ class StreamingSpec extends SparkSpec {
     assert(causes(e).exists(c => Option(c.getMessage)
         .exists(_.contains("exceeded maxIdsPerKey"))),
       s"expected the maxIdsPerKey contract failure, got: $e")
+  }
+
+  test("a failed drain stops its query and restores the caller's shuffle partitions") {
+    val dir = "/root/testdata/sf0.001"
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    // a value the drain's own setting (4) cannot be mistaken for
+    spark.conf.set(key, "7")
+    try {
+      intercept[Exception] {
+        StreamingCollapse.streamingJoinDelta(spark, dir, maxIdsPerKey = 2).collect()
+      }
+      assert(!spark.streams.active.exists(q =>
+        Option(q.name).contains("graft_stream_joindelta")))
+      assert(spark.conf.get(key) === "7")
+    } finally spark.conf.set(key, prev)
   }
 
   test("streamingFunnel: drained advance counts equal the batch funnel") {
