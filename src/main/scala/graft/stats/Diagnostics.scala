@@ -2116,27 +2116,26 @@ object Diagnostics {
       .repartition(spark.sparkContext.defaultParallelism)
       .flatMap { case (key, ci, y, x) =>
         val xOpt = exogCol.map(_ => x)
-        scala.util.Try(Sarimax.fit(y, xOpt, candidates(ci))).toOption.flatten
-          .iterator.map { fit =>
-            val kern = Sarimax.forecastKernel(fit, y, xOpt, horizon)
-            // exog RW drift from the trailing window (ddof=1), reference shape
-            val tail = x.takeRight(math.min(fitWindow, x.length))
-            val dx = Array.tabulate(math.max(tail.length - 1, 0))(i => tail(i + 1) - tail(i))
-            val (mu, sigma) =
-              if (dx.length < 5) (0.0, 0.0)
-              else {
-                val m = dx.sum / dx.length
-                val v = dx.map(d0 => (d0 - m) * (d0 - m)).sum / (dx.length - 1)
-                (m, if (v.isNaN) 0.0 else math.sqrt(v))
-              }
-            (ci, SarimaxModelRow(key,
-              s"(${fit.spec.p},${fit.spec.d},${fit.spec.q})",
-              s"(${fit.spec.P},${fit.spec.D},${fit.spec.Q},${fit.spec.s})",
-              fit.aic, fit.intercept, fit.beta, fit.sigma2,
-              fit.spec.p, fit.spec.d, fit.spec.q, fit.spec.P, fit.spec.D, fit.spec.Q, fit.spec.s,
-              kern.armaBase, kern.yTail, kern.xTail,
-              if (x.isEmpty) 0.0 else x.last, mu, sigma))
-          }
+        Sarimax.fit(y, xOpt, candidates(ci)).iterator.map { fit =>
+          val kern = Sarimax.forecastKernel(fit, y, xOpt, horizon)
+          // exog RW drift from the trailing window (ddof=1), reference shape
+          val tail = x.takeRight(math.min(fitWindow, x.length))
+          val dx = Array.tabulate(math.max(tail.length - 1, 0))(i => tail(i + 1) - tail(i))
+          val (mu, sigma) =
+            if (dx.length < 5) (0.0, 0.0)
+            else {
+              val m = dx.sum / dx.length
+              val v = dx.map(d0 => (d0 - m) * (d0 - m)).sum / (dx.length - 1)
+              (m, if (v.isNaN) 0.0 else math.sqrt(v))
+            }
+          (ci, SarimaxModelRow(key,
+            s"(${fit.spec.p},${fit.spec.d},${fit.spec.q})",
+            s"(${fit.spec.P},${fit.spec.D},${fit.spec.Q},${fit.spec.s})",
+            fit.aic, fit.intercept, fit.beta, fit.sigma2,
+            fit.spec.p, fit.spec.d, fit.spec.q, fit.spec.P, fit.spec.D, fit.spec.Q, fit.spec.s,
+            kern.armaBase, kern.yTail, kern.xTail,
+            if (x.isEmpty) 0.0 else x.last, mu, sigma))
+        }
       }
     // AIC argmin per key; ties break to the LOWEST candidate index,
     // replicating fitBest's first-minimum (candidate-order) semantics

@@ -214,6 +214,22 @@ class ForecastPipelineSpec extends SparkSpec {
       rows("ar_hi").seasonal == "(1,0,0,1)", rows("ar_hi").toString)
   }
 
+  test("sarimaxModels: degenerate series drop out without an exception") {
+    val rng = new scala.util.Random(4)
+    val n = 60
+    val y = Array.tabulate(n)(t => 10.0 + 0.3 * t + 2 * math.sin(t / 2.0) + rng.nextGaussian())
+    val x = Array.tabulate(n)(t => 3.0 + 0.1 * t + rng.nextGaussian())
+    val series = Seq(("nan", y.updated(30, Double.NaN), x), ("const", Array.fill(n)(7.0), x),
+      ("zero_exog", y, Array.fill(n)(3.0)), ("short", y.take(20), x.take(20)))
+    val df = series.flatMap { case (k, yy, xx) =>
+      yy.indices.map(t => (k, f"${2015 + t / 12}-${t % 12 + 1}%02d-01", yy(t), xx(t)))
+    }.toDF("k", "m", "y", "x").select(col("k"), to_date(col("m")).as("month"), col("y"), col("x"))
+    val rows = Diagnostics.sarimaxModels(df, Seq("k"), "month", "y", Some("x"), horizon = 6)
+      .collect()
+    val keys = rows.map(_.key).toSet
+    assert(keys("zero_exog") && !keys("nan") && !keys("short"), keys.mkString(","))
+  }
+
   test("sarimaxModels: the fit stage runs on every core, not one AQE-coalesced task") {
     val expected = math.min(spark.sparkContext.defaultParallelism, panel.length * tieGrid.length)
     val counts = stageTaskCounts {
