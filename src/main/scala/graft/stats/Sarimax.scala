@@ -117,20 +117,13 @@ object Sarimax {
     (ll, filter.sigma2)
   }
 
-  /** κ of the diffuse prior taken when the AR part is not stationary:
-    * max(1e7, 1e6·mean(u²)), so it grows with the data scale (the 1e7
-    * floor keeps small-scale series at the original fixed prior). Both
-    * filters — the likelihood's and the forecast's — start from this one
-    * κ, so a forecast's end state is filtered under the prior its fit
-    * maximized. */
-  private def diffuseKappa(u: Array[Double]): Double = {
-    val n = u.length
-    var msU = 0.0
-    var t = 0
-    while (t < n) { msU += u(t) * u(t); t += 1 }
-    msU = if (n > 0) msU / n else 1.0
-    math.max(1e7, 1e6 * msU)
-  }
+  /** κ of the diffuse prior κ·I taken when the AR part is not
+    * stationary. The filter's covariance is in units of σ² (σ² is
+    * concentrated out), so a fixed κ is scale-free: scaling the data by c
+    * moves every candidate's loglik by the same −n·ln c. Both filters —
+    * the likelihood's and the forecast's — start from it, so a forecast's
+    * end state is filtered under the prior its fit maximized. */
+  private val DiffuseKappa = 1e7
 
   /** z_t − c − β·w_t into `u`: the ARMA errors of the regression part. */
   private def residualsInto(z: Array[Double], w: Option[Array[Double]], c: Double,
@@ -203,7 +196,7 @@ object Sarimax {
       * positive. */
     def loglik(u: Array[Double], ar: Array[Double], ma: Array[Double]): Double = {
       val n = u.length
-      start(ar, ma, diffuseKappa(u))
+      start(ar, ma)
       sigma2 = Double.NaN
       var sumLogF = 0.0
       var sumV2F = 0.0
@@ -222,7 +215,7 @@ object Sarimax {
     }
 
     /** Load ARMA(ar, ma) and its prior, with a zero state mean. */
-    def start(ar: Array[Double], ma: Array[Double], kappa: Double): Unit = {
+    def start(ar: Array[Double], ma: Array[Double]): Unit = {
       load(ar, ma)
       java.util.Arrays.fill(a, 0.0)
       dense = !stationaryRow(kf)
@@ -230,7 +223,7 @@ object Sarimax {
         if (p == null) { p = new Array[Double](m * m); k = new Array[Double](m); tp = new Array[Double](m * m) }
         java.util.Arrays.fill(p, 0.0)
         var i = 0
-        while (i < m) { p(i * m + i) = kappa; i += 1 }
+        while (i < m) { p(i * m + i) = DiffuseKappa; i += 1 }
       } else {
         // F₁ = P₀(0,0); K₁F₁ = T P₀ e1; P₂ − P₁ = −(K₁F₁)(K₁F₁)ᵀ/F₁
         f = kf(0)
@@ -695,7 +688,7 @@ object Sarimax {
     val maC = expandPoly(fitted.theta, fitted.stheta, s, signAr = false)
     // filter to the end state a_{n+1|n} under the fit's own prior
     val filter = new ArmaFilter(math.max(arC.length, maC.length + 1))
-    filter.start(arC, maC, diffuseKappa(u))
+    filter.start(arC, maC)
     var t = 0
     while (t < u.length) { filter.step(u(t)); t += 1 }
     // each further T application advances one step

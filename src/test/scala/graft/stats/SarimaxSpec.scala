@@ -510,27 +510,43 @@ class SarimaxSpec extends AnyFunSuite {
   }
 
   test("forecastKernel: an explosive-AR end state is filtered under the likelihood's prior") {
-    // armaLoglik's diffuse κ is max(1e7, 1e6·mean(u²)); the forecast must
-    // filter under that same prior, at any data scale. A near-unit MA
-    // keeps the prior's pull alive to the end state (a pure AR state is
-    // pinned by its first m observations whatever the prior).
+    // armaLoglik's diffuse prior is κ·I with κ = 1e7 in σ² units; the
+    // forecast must filter under that same prior, at any data scale. A
+    // near-unit MA keeps the prior's pull alive to the end state (a pure
+    // AR state is pinned by its first m observations whatever the prior).
     val (phi, theta) = (1.06, 0.99)
-    for (c <- Seq(1.0, 1e4)) {
+    val bases = for (c <- Seq(1.0, 1e4)) yield {
       val y = explosive(96, 1.0, 8).map(_ * c)
       val f = SarimaxFit(SarimaxSpec(1, 1, 1, 0, 1, 0, 12), intercept = 0.3 * c, beta = 0.0,
         phi = Array(phi), theta = Array(theta), sphi = Array.empty, stheta = Array.empty,
         sigma2 = c * c, loglik = 0.0, aic = 0.0, nObs = 83)
       val u = difference(y, 1, 1, 12).map(_ - f.intercept)
-      val kappa = math.max(1e7, 1e6 * u.map(v => v * v).sum / u.length)
-      val expected = arma11Base(u, phi, theta, kappa, 12)
-      val fixed = arma11Base(u, phi, theta, 1e7, 12)
+      val expected = arma11Base(u, phi, theta, 1e7, 12)
+      val other = arma11Base(u, phi, theta, 1e10, 12)
       val got = forecastKernel(f, y, None, 12).armaBase
       def rel(a: Double, b: Double) = math.abs(a - b) / math.abs(b)
       expected.indices.foreach { j =>
         assert(rel(got(j), expected(j)) <= 1e-13, s"×$c step $j: ${got(j)} vs ${expected(j)}")
-        // the check bites: the fixed-κ prior lands measurably elsewhere
-        assert(rel(fixed(j), expected(j)) > 1e-12, s"×$c step $j: κ does not matter here")
+        // the check bites: another κ lands measurably elsewhere
+        assert(rel(other(j), expected(j)) > 1e-12, s"×$c step $j: κ does not matter here")
       }
+      got
+    }
+    // scale-free: the ×1e4 end state is the ×1 one scaled
+    bases(0).indices.foreach(j => approx(bases(1)(j) / 1e4, bases(0)(j), 1e-10 * math.abs(bases(0)(j))))
+  }
+
+  test("armaLoglik: an explosive candidate's loglik does not depend on the data's units") {
+    // σ² is concentrated out and the diffuse κ is in σ² units, so scaling
+    // u by c moves the loglik by exactly −n·ln c, as for a stationary one
+    val u = difference(explosive(96, 0.01, 6), 1, 1, 12)
+    val n = u.length
+    val (ar, ma) = (Array(1.06), Array(0.3))
+    assert(stationaryRow(ar, ma).isEmpty, "not on the diffuse branch")
+    val (ll1, _) = armaLoglik(u, ar, ma)
+    for (c <- Seq(1e2, 1e4, 1e6)) {
+      val (llc, _) = armaLoglik(u.map(_ * c), ar, ma)
+      approx(llc + n * math.log(c), ll1, 1e-6)
     }
   }
 
